@@ -1,7 +1,7 @@
 """Spark 4 Python DataSource connector for Arrow IPC shard directories.
 
-The ``io.ipc`` module reads shard dirs by parallelizing a file list into
-``mapInArrow`` tasks; this module exposes the SAME storage layout through
+The ``io.ipc`` module reads shard dirs with ``mapInArrow`` tasks over the
+file indices; this module exposes the SAME storage layout through
 Spark's first-class connector API (``pyspark.sql.datasource``, new in
 Spark 4), so the format composes with everything a registered source
 gets for free: ``spark.read.format("aas_ipc").load(dir)``, SQL
@@ -27,31 +27,60 @@ from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 
 def _shards(path: str) -> list[str]:
-    files = sorted(
-        _glob.glob(os.path.join(path, "*.arrow"))
-        + _glob.glob(os.path.join(path, "*.arrows"))
-    )
+    """The IPC files behind ``path``: a shard directory's ``*.arrow`` and
+    ``*.arrows`` files, the matches of a glob pattern, or one file —
+    sorted, and never empty (FileNotFoundError)."""
+    if os.path.isdir(path):
+        files = _glob.glob(os.path.join(path, "*.arrow")) + _glob.glob(
+            os.path.join(path, "*.arrows")
+        )
+    elif any(c in path for c in "*?["):
+        files = _glob.glob(path)
+    else:
+        files = [path] if os.path.isfile(path) else []
     if not files:
-        raise FileNotFoundError(f"no IPC shards under {path}")
-    return files
+        raise FileNotFoundError(f"no IPC files under {path}")
+    return sorted(files)
 
 
-def _read_shard_table(path: str):
+def _dense(schema):
+    """``schema`` with dictionary fields decoded to their value types —
+    the Spark representation (SURVEY §1.2 DICTIONARY)."""
+    import pyarrow as pa
+
+    return pa.schema(
+        [
+            f.with_type(f.type.value_type) if pa.types.is_dictionary(f.type) else f
+            for f in schema
+        ]
+    )
+
+
+def _open_shard(source):
     import pyarrow as pa
     import pyarrow.ipc as ipc
 
+    try:
+        return ipc.open_file(source)
+    except pa.ArrowInvalid:
+        source.seek(0)
+        return ipc.open_stream(source)
+
+
+def _shard_schema(path: str):
+    """Dense Arrow schema of one shard, from its IPC metadata only."""
     with open(path, "rb") as fh:
-        try:
-            table = ipc.open_file(fh).read_all()
-        except pa.ArrowInvalid:
-            fh.seek(0)
-            table = ipc.open_stream(fh).read_all()
-    # dictionary columns decode to dense (the Spark representation)
-    fields = [
-        f.with_type(f.type.value_type) if pa.types.is_dictionary(f.type) else f
-        for f in table.schema
-    ]
-    dense = pa.schema(fields)
+        return _dense(_open_shard(fh).schema)
+
+
+def _read_shard_table(path: str):
+    """One whole shard (file or stream format), memory-mapped and with
+    dictionary columns decoded to dense."""
+    import pyarrow as pa
+
+    with pa.memory_map(path, "rb") as source:
+        table = _open_shard(source).read_all()
+    dense = _dense(table.schema)
     if dense != table.schema:
         table = table.cast(dense)
     return table
@@ -106,11 +135,8 @@ class ArrowIPCDataSource(DataSource):
     def schema(self):
         from pyspark.sql.pandas.types import from_arrow_schema
 
-        import pyarrow as pa
-
         first = _shards(self.options["path"])[0]
-        table = _read_shard_table(first)
-        return from_arrow_schema(table.schema, prefer_timestamp_ntz=True)
+        return from_arrow_schema(_shard_schema(first), prefer_timestamp_ntz=True)
 
     def reader(self, schema):
         return ArrowIPCShardReader(self.options["path"])

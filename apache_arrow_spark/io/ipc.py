@@ -7,11 +7,21 @@ The reference wire formats (format/IPC.md:22-95):
   access by batch (writer.h:127, reader.cc:563, format/File.fbs:26-40).
 
 Spark-first design: a directory of IPC shards is the distributed dataset
-(same model as parquet part-files).  The sink runs ``mapInArrow`` so every
-executor writes its partition as one shard — Arrow batches never pass
-through Python row objects, and nothing funnels through the driver.  The
-source distributes the *file list* and each task reads whole shards with
-pyarrow (zero-copy mmap), again via ``mapInArrow``.
+(same model as parquet part-files), and the bulk traffic stays columnar
+end to end.
+
+- The sink ships the Arrow record-batch messages Spark already encodes in
+  the JVM (``Dataset.toArrowBatchRdd``, the batches behind
+  ``DataFrame.toArrow``) to one Python task per partition.  The task
+  decodes each message zero-copy against the schema derived the way
+  ``toArrow`` derives it, and writes its partition as one shard — no
+  row-to-Arrow re-encode in a Python UDF, nothing through the driver.
+  Where that JVM handle is unavailable (Spark Connect has no ``_jdf``),
+  the same shard writer runs under ``mapInArrow`` instead, and the
+  fallback is logged once per process.
+- The source plans one task per group of shards straight off
+  ``spark.range`` — task *i* opens ``files[i]`` — so no exchange runs
+  ahead of the read; each task memory-maps whole shards with pyarrow.
 
 Single-file mode exists for interop with external tools expecting one
 ``.arrows`` file — driver-side by necessity, documented small-data-only.
@@ -30,24 +40,37 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-import glob as _glob
 import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from apache_arrow_spark.io.datasource import _read_shard_table, _shard_schema, _shards
+from apache_arrow_spark.log import warn_once
 
-def _shard_pattern(path: str) -> list[str]:
-    if os.path.isdir(path):
-        files = sorted(
-            _glob.glob(os.path.join(path, "*.arrow"))
-            + _glob.glob(os.path.join(path, "*.arrows"))
-        )
-    else:
-        files = sorted(_glob.glob(path)) if any(c in path for c in "*?[") else [path]
-    if not files:
-        raise FileNotFoundError(f"no IPC files under {path}")
-    return files
+
+def _arrow_schema(df: DataFrame):
+    """The Arrow schema ``DataFrame.toArrow`` gives ``df``: the schema the
+    JVM-encoded batches decode with, and the one every shard carries."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    large = df.sparkSession.conf.get("spark.sql.execution.arrow.useLargeVarTypes")
+    return to_arrow_schema(
+        df.schema,
+        error_on_duplicated_field_names_in_struct=True,
+        prefers_large_types=large.lower() == "true",
+    )
+
+
+def _jvm_arrow_batches(df: DataFrame):
+    """The partitions of ``df`` as the Arrow IPC record-batch messages
+    Spark encodes in the JVM, one ``bytes`` per batch.  Raises where the
+    session has no JVM handle, e.g. on Spark Connect."""
+    from pyspark.core.rdd import RDD
+    from pyspark.serializers import NoOpSerializer
+
+    jrdd = df._jdf.toArrowBatchRdd().toJavaRDD()
+    return RDD(jrdd, df.sparkSession.sparkContext, NoOpSerializer())
 
 
 def write_ipc(
@@ -58,7 +81,8 @@ def write_ipc(
     num_shards: int | None = None,
     shard_cols: Sequence[str] = (),
 ) -> int:
-    """Distributed IPC sink: one shard per partition under ``path``/.
+    """Distributed IPC sink: one shard per non-empty partition under
+    ``path``/.
 
     Returns the number of shards written.  ``format``: 'stream' (.arrows,
     RecordBatchStreamWriter parity) or 'file' (.arrow, RecordBatchFileWriter
@@ -106,18 +130,20 @@ def write_ipc(
     run_id = uuid.uuid4().hex[:8]
     dict_cols = list(dictionary_encode)
 
-    def _write(batches):
+    def _write_shard(pid, batches):
+        """Write one partition's batches as one shard; yield its
+        ``(path, rows)``, path None when the partition held no rows."""
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.ipc as ipc
-        from pyspark import TaskContext
 
-        pid = TaskContext.get().partitionId()
         out = os.path.join(path, f"part-{pid:05d}-{run_id}.{ext}")
         writer = None
         rows = 0
         opts = ipc.IpcWriteOptions(emit_dictionary_deltas=True)
         for batch in batches:
+            if not batch.num_rows:
+                continue
             if dict_cols:
                 arrays = [
                     pc.dictionary_encode(batch.column(name))
@@ -137,73 +163,72 @@ def write_ipc(
             rows += batch.num_rows
         if writer is not None:
             writer.close()
-        yield pa.RecordBatch.from_pydict(
-            {"path": [out if rows or writer else None], "rows": [rows]}
-        )
+        yield (out if writer is not None else None), rows
 
-    manifest = df.mapInArrow(_write, "path string, rows bigint").collect()
-    return sum(1 for r in manifest if r["path"] is not None)
+    schema = _arrow_schema(df)
+    try:
+        rdd = _jvm_arrow_batches(df)
+    except Exception as exc:
+        warn_once(
+            "io.ipc.write_ipc",
+            "write_ipc: JVM Arrow batches unavailable (%s: %s); "
+            "writing shards through mapInArrow instead",
+            type(exc).__name__,
+            exc,
+        )
+        manifest = _write_via_map_in_arrow(df, _write_shard, schema)
+    else:
+
+        def _from_jvm(pid, messages):
+            import pyarrow as pa
+
+            return _write_shard(
+                pid, (pa.ipc.read_record_batch(pa.py_buffer(m), schema) for m in messages)
+            )
+
+        manifest = rdd.mapPartitionsWithIndex(_from_jvm).collect()
+    return sum(1 for out, _rows in manifest if out is not None)
+
+
+def _write_via_map_in_arrow(df: DataFrame, write_shard, schema) -> list[tuple]:
+    """The sink's fallback: ``write_shard`` runs inside ``mapInArrow``.
+    Batches are cast to ``schema`` (mapInArrow labels timestamps with the
+    session time zone, ``toArrow`` with UTC), so both paths write the
+    same shard schema."""
+
+    def _write(batches):
+        import pyarrow as pa
+        from pyspark import TaskContext
+
+        cast = (b if b.schema == schema else b.cast(schema) for b in batches)
+        for out, rows in write_shard(TaskContext.get().partitionId(), cast):
+            yield pa.RecordBatch.from_pydict({"path": [out], "rows": [rows]})
+
+    rows = df.mapInArrow(_write, "path string, rows bigint").collect()
+    return [(r["path"], r["rows"]) for r in rows]
 
 
 def read_ipc(spark: SparkSession, path: str) -> DataFrame:
     """Distributed IPC source: schema from the first shard's metadata
-    (driver, cheap), shard list parallelized, whole-shard reads in tasks.
+    (driver, cheap), then whole-shard reads in tasks planned straight off
+    ``spark.range`` over the file indices — no exchange ahead of the read.
 
+    ``path`` is a shard directory, a glob pattern, or one IPC file.
     Handles both wire formats and dictionary-encoded columns (dictionaries
     are decoded to dense — the Spark representation; SURVEY §1.2 DICTIONARY).
     """
-    import pyarrow as pa
-    import pyarrow.ipc as ipc
     from pyspark.sql.pandas.types import from_arrow_schema
 
-    files = _shard_pattern(path)
-
-    with open(files[0], "rb") as fh:
-        try:
-            arrow_schema = ipc.open_file(fh).schema
-        except pa.ArrowInvalid:
-            fh.seek(0)
-            arrow_schema = ipc.open_stream(fh).schema
-
-    # dictionary columns decode to their value type
-    fields = [
-        f.with_type(f.type.value_type) if pa.types.is_dictionary(f.type) else f
-        for f in arrow_schema
-    ]
-    spark_schema = from_arrow_schema(pa.schema(fields), prefer_timestamp_ntz=True)
-
-    paths_df = spark.createDataFrame([(f,) for f in files], "path string").repartition(
-        min(len(files), spark.sparkContext.defaultParallelism)
-    )
+    files = _shards(path)
+    spark_schema = from_arrow_schema(_shard_schema(files[0]), prefer_timestamp_ntz=True)
 
     def _read(batches):
-        import pyarrow as pa_
-        import pyarrow.ipc as ipc_
-
         for b in batches:
-            for p in b.column("path").to_pylist():
-                with pa_.memory_map(p, "rb") as source:
-                    try:
-                        reader = ipc_.open_file(source)
-                        table = reader.read_all()
-                    except pa_.ArrowInvalid:
-                        with pa_.memory_map(p, "rb") as s2:
-                            table = ipc_.open_stream(s2).read_all()
-                for col in table.schema.names:
-                    if pa_.types.is_dictionary(table.schema.field(col).type):
-                        idx = table.schema.get_field_index(col)
-                        table = table.set_column(
-                            idx,
-                            table.schema.field(col).with_type(
-                                table.schema.field(col).type.value_type
-                            ),
-                            table.column(col).cast(
-                                table.schema.field(col).type.value_type
-                            ),
-                        )
-                yield from table.to_batches()
+            for i in b.column("id").to_pylist():
+                yield from _read_shard_table(files[i]).to_batches()
 
-    return paths_df.mapInArrow(_read, spark_schema)
+    n = min(len(files), spark.sparkContext.defaultParallelism)
+    return spark.range(len(files), numPartitions=n).mapInArrow(_read, spark_schema)
 
 
 def write_ipc_single(df: DataFrame, path: str, format: str = "stream") -> None:

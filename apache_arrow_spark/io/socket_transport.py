@@ -35,12 +35,15 @@ class _EchoHandler(socketserver.BaseRequestHandler):
         with pa.ipc.open_stream(rfile) as reader:
             batches = list(reader)
             schema = reader.schema
+        # counted before the echo goes out: a client that has read the
+        # whole echo must already see its batches in ``batches_echoed``
+        with self.server.echoed_lock:  # type: ignore[attr-defined]
+            self.server.echoed += len(batches)  # type: ignore[attr-defined]
         wfile = self.request.makefile("wb")
         with pa.ipc.new_stream(wfile, schema) as writer:
             for b in batches:
                 writer.write_batch(b)
         wfile.flush()
-        self.server.echoed += len(batches)  # type: ignore[attr-defined]
 
 
 class EchoServer:
@@ -56,6 +59,7 @@ class EchoServer:
         self._server = socketserver.ThreadingTCPServer((host, port), _EchoHandler)
         self._server.daemon_threads = True
         self._server.echoed = 0  # type: ignore[attr-defined]
+        self._server.echoed_lock = threading.Lock()  # type: ignore[attr-defined]
         self._thread = threading.Thread(target=self._server.serve_forever, daemon=True)
 
     @property

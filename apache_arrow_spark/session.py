@@ -17,6 +17,18 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+
+def default_cpus() -> int:
+    """Local parallelism: ``SPARK_GRAFT_CPUS`` when set, else the CPUs
+    this process may run on."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    if env:
+        return int(env)
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
 TABLE_NAMES = (
     "region",
     "nation",
@@ -48,9 +60,7 @@ _RUNTIME_CONFS = {
     # Externally built sessions (the correctness driver's) otherwise run
     # with the 200-partition default — 6x the task count this box needs.
     # Runtime-settable; AQE coalescing makes any over-provision cheap.
-    "spark.sql.shuffle.partitions": str(
-        max(int(os.environ.get("SPARK_GRAFT_CPUS", "32")), 8)
-    ),
+    "spark.sql.shuffle.partitions": str(max(default_cpus(), 8)),
 }
 
 
@@ -257,11 +267,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's scale posture.
 
-    ``SPARK_GRAFT_CPUS`` controls local parallelism (default 32, matching the
-    driver).  Shuffle partitions default to 2x cores locally; on a real
-    cluster AQE coalescing makes over-provisioning cheap.
+    ``SPARK_GRAFT_CPUS`` controls local parallelism (default: the CPUs this
+    process may run on, ``default_cpus``).  Shuffle partitions default to
+    the core count, floor 8; on a real cluster AQE coalescing makes
+    over-provisioning cheap.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     master = master or f"local[{cpus}]"
     shuffle = shuffle_partitions or max(cpus, 8)
     builder = (

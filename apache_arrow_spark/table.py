@@ -52,9 +52,11 @@ class Table:
 
     @classmethod
     def from_pandas(cls, spark: SparkSession, pdf, schema=None) -> "Table":
-        """pandas ingest (reference Table.from_pandas, table.pxi:843) — rides
-        Spark's Arrow path (spark.sql.execution.arrow.pyspark.enabled)."""
-        return cls(spark.createDataFrame(pdf, schema=schema))
+        """pandas ingest (reference Table.from_pandas, table.pxi:843) — the
+        Arrow path and batch sizing of ``io.from_pandas``."""
+        from apache_arrow_spark.io.pandas_bridge import from_pandas
+
+        return cls(from_pandas(spark, pdf, schema=schema))
 
     @classmethod
     def from_batches(cls, spark: SparkSession, batches) -> "Table":

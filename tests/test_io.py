@@ -588,3 +588,179 @@ def test_write_ipc_warns_shard_cols_without_num_shards(spark, tmp_path):
         write_ipc(df, path, shard_cols=("k",))
     assert any("shard_cols is ignored" in str(w.message) for w in caught)
     assert read_ipc(spark, path).count() == 8
+
+
+_ALL_TYPES_SQL = """
+SELECT id AS l,
+       IF(id % 7 = 0, NULL, id / 3.0D) AS d,
+       IF(id % 5 = 0, NULL, CONCAT('s', CAST(id AS STRING))) AS s,
+       CAST(CONCAT('b', CAST(id AS STRING)) AS BINARY) AS b,
+       CAST(id / 7 AS DECIMAL(18, 4)) AS dec,
+       DATE_ADD(DATE'2020-01-01', CAST(id AS INT)) AS dt,
+       TIMESTAMP_SECONDS(id * 3601) AS ts,
+       ARRAY(id, IF(id % 2 = 0, NULL, id + 1)) AS arr,
+       NAMED_STRUCT('a', id, 'b', CAST(id AS STRING)) AS st,
+       CAST(NULL AS STRING) AS nul
+FROM range(0, 3000, 1, 3)
+"""
+
+
+def _shard_files(path):
+    import glob
+
+    return sorted(glob.glob(f"{path}/*.arrow") + glob.glob(f"{path}/*.arrows"))
+
+
+@pytest.mark.parametrize("fmt", ["stream", "file"])
+def test_write_ipc_jvm_batches_roundtrip_all_types(spark, tmp_path, monkeypatch, fmt):
+    """The JVM-encoded sink keeps every Spark type the Arrow bridge maps,
+    in both wire formats; file shards carry a readable footer."""
+    import pyarrow.ipc as ipc
+
+    import apache_arrow_spark.io.ipc as ipc_mod
+
+    def _no_fallback(*args):
+        raise AssertionError("write_ipc fell back to mapInArrow")
+
+    monkeypatch.setattr(ipc_mod, "_write_via_map_in_arrow", _no_fallback)
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    df = spark.sql(_ALL_TYPES_SQL)
+    path = str(tmp_path / f"types_{fmt}")
+    assert write_ipc(df, path, format=fmt) == 3
+    files = _shard_files(path)
+    assert len(files) == 3
+    if fmt == "file":
+        footer_rows = 0
+        for f in files:
+            with pa.memory_map(f) as src:
+                reader = ipc.open_file(src)
+                for i in range(reader.num_record_batches):
+                    footer_rows += reader.get_batch(i).num_rows
+        assert footer_rows == 3000
+    back = read_ipc(spark, path)
+    assert back.schema == df.schema
+    assert back.orderBy("l").collect() == df.orderBy("l").collect()
+    # a glob over the same shards reads the same rows
+    ext = "arrows" if fmt == "stream" else "arrow"
+    assert read_ipc(spark, os.path.join(path, f"*.{ext}")).count() == 3000
+
+
+def _force_map_in_arrow(monkeypatch):
+    """Make the JVM batch handle unavailable (as on Spark Connect, which
+    has no ``_jdf``), with the once-per-process warning re-armed."""
+    import apache_arrow_spark.io.ipc as ipc_mod
+    import apache_arrow_spark.log as log_mod
+
+    def _unavailable(df):
+        raise AttributeError("'DataFrame' object has no attribute '_jdf'")
+
+    monkeypatch.setattr(ipc_mod, "_jvm_arrow_batches", _unavailable)
+    monkeypatch.setattr(log_mod, "_warned", set())
+
+
+def _first_schema(path):
+    import pyarrow.ipc as ipc
+
+    with pa.memory_map(_shard_files(path)[0]) as src:
+        return ipc.open_stream(src).schema
+
+
+def test_write_ipc_fallback_matches_jvm_path(spark, tmp_path, monkeypatch, caplog):
+    """The mapInArrow fallback writes the same Arrow schema and the same
+    rows as the JVM path, and logs one WARN per process that it degraded.
+    Run off UTC: mapInArrow labels timestamps with the session time zone,
+    the JVM path (like ``toArrow``) with UTC."""
+    import logging
+
+    tz_key = "spark.sql.session.timeZone"
+    tz = spark.conf.get(tz_key)
+    spark.conf.set(tz_key, "America/Los_Angeles")
+    try:
+        df = spark.sql(_ALL_TYPES_SQL)
+        fast, slow = str(tmp_path / "jvm"), str(tmp_path / "fallback")
+        assert write_ipc(df, fast) == 3
+        _force_map_in_arrow(monkeypatch)
+        with caplog.at_level(logging.WARNING, logger="apache_arrow_spark"):
+            assert write_ipc(df, slow) == 3
+            assert write_ipc(df, str(tmp_path / "fallback_again")) == 3
+        degraded = [r for r in caplog.records if r.name == "apache_arrow_spark"]
+        assert len(degraded) == 1
+        assert degraded[0].levelno == logging.WARNING
+        assert "mapInArrow" in degraded[0].getMessage()
+        assert _first_schema(slow) == _first_schema(fast)
+        a = read_ipc(spark, fast).orderBy("l").collect()
+        b = read_ipc(spark, slow).orderBy("l").collect()
+        assert a == b == df.orderBy("l").collect()
+    finally:
+        spark.conf.set(tz_key, tz)
+
+
+@pytest.mark.parametrize("sink", ["jvm", "map_in_arrow"])
+def test_write_ipc_skips_empty_partitions(spark, tmp_path, monkeypatch, sink):
+    """A partition without rows writes no shard, and the return value
+    counts only the shards written."""
+    if sink == "map_in_arrow":
+        _force_map_in_arrow(monkeypatch)
+    # range(0, 40, 1, 4) puts ids 0-9 in partition 0 and 10-19 in 1
+    df = spark.range(0, 40, 1, 4).filter("id < 15")
+    assert df.rdd.getNumPartitions() == 4
+    path = str(tmp_path / "sparse")
+    assert write_ipc(df, path) == 2
+    assert len(_shard_files(path)) == 2
+    assert sorted(r.id for r in read_ipc(spark, path).collect()) == list(range(15))
+
+
+def test_read_ipc_missing_path_raises(spark, tmp_path):
+    with pytest.raises(FileNotFoundError):
+        read_ipc(spark, str(tmp_path / "absent.arrows"))
+    with pytest.raises(FileNotFoundError):
+        read_ipc(spark, str(tmp_path))
+
+
+def test_from_pandas_one_batch_per_core_restores_batch_conf(spark):
+    """A frame larger than the session batch size ingests as at most
+    defaultParallelism partitions, and arrow.maxRecordsPerBatch is left
+    exactly as found — including the NOT-SET state."""
+    import numpy as np
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    # frames under this size become a LocalRelation, whatever the batches;
+    # zero sends this small frame down the one-partition-per-batch path
+    local = "spark.sql.execution.arrow.localRelationThreshold"
+    cores = spark.sparkContext.defaultParallelism
+    pdf = pd.DataFrame({"id": np.arange(50_000, dtype=np.int64), "x": np.arange(50_000) / 8})
+    before = spark.conf.get(key, None)
+    spark.conf.set(local, "0")
+    try:
+        sdf = from_pandas(spark, pdf)
+        assert spark.conf.get(key, None) == before
+        assert sdf.rdd.getNumPartitions() <= cores
+        assert sdf.agg(F.count("id"), F.sum("id"), F.sum("x")).first() == (
+            50_000,
+            pdf["id"].sum(),
+            pdf["x"].sum(),
+        )
+        spark.conf.set(key, "1000")
+        sdf = from_pandas(spark, pdf)
+        assert spark.conf.get(key, None) == "1000"
+        assert sdf.rdd.getNumPartitions() <= cores
+    finally:
+        spark.conf.unset(key)
+        spark.conf.unset(local)
+
+
+def test_from_pandas_batch_byte_cap(spark, monkeypatch):
+    """The per-core batch is capped by the frame's measured bytes, but
+    never drops below the session's own batch size."""
+    import numpy as np
+
+    from apache_arrow_spark.io import pandas_bridge
+
+    pdf = pd.DataFrame({"x": np.zeros(100_000)})  # 8 B a row
+    cores = spark.sparkContext.defaultParallelism
+    assert pandas_bridge._ingest_batch_rows(spark, pdf) == max(10_000, -(-100_000 // cores))
+    monkeypatch.setattr(pandas_bridge, "_MAX_BATCH_BYTES", 8 * 20_000)
+    assert pandas_bridge._ingest_batch_rows(spark, pdf) == 20_000
+    monkeypatch.setattr(pandas_bridge, "_MAX_BATCH_BYTES", 8 * 100)
+    assert pandas_bridge._ingest_batch_rows(spark, pdf) == 10_000
+    assert pandas_bridge._ingest_batch_rows(spark, pdf.iloc[:500]) == 10_000

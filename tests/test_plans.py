@@ -898,3 +898,16 @@ def test_get_spark_local_dir_is_per_pid(spark):
         pytest.skip("operator-supplied local dir — reaper out of scope")
     conf = spark.sparkContext.getConf().get("spark.local.dir")
     assert conf.rstrip("/").endswith(os.sep + str(os.getpid()))
+
+
+def test_default_cpus_follows_env_then_affinity(monkeypatch):
+    """Local parallelism comes from SPARK_GRAFT_CPUS when set, else from
+    the CPUs this process may run on — never a fixed core count."""
+    import os
+
+    from apache_arrow_spark.session import default_cpus
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_cpus() == 3
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    assert default_cpus() == len(os.sched_getaffinity(0))
