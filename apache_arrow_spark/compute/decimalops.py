@@ -39,11 +39,3 @@ def exact_avg(col: Column, precision: int = 18, scale: int = 4, ndigits: int = 6
 
 def negate(col: Column) -> Column:
     return -col
-
-
-def abs_(col: Column) -> Column:
-    return F.abs(col)
-
-
-def decimal_mod(a: Column, b: Column) -> Column:
-    return a % b

@@ -27,62 +27,13 @@ from apache_arrow_spark.functions.text import (
     shingles_of_normalized,
     tokens,
 )
+from apache_arrow_spark.session import broadcast_if, compute_parallelism, measured, observed
 
 # xor-fold constants: a fixed seeded set of 64-bit masks; h_j(s) = h(s) XOR
 # R[j] is a family of bijections over int64 — the standard cheap stand-in for
 # MinHash permutations.
 _rng = random.Random(0xA44)
 XOR_MASKS = [_rng.getrandbits(63) for _ in range(64)]
-
-# One policy for "small enough to broadcast after measuring": used by the
-# verify stage's pair keyset and cluster_assignments' component join-back
-# so the two sites can never drift apart.
-BROADCAST_ROW_LIMIT = 1 << 20
-
-# Below this measured cardinality the candidate pair table's lineage is
-# TRUNCATED (r10 verdict #1): localCheckpoint re-roots the already-cached
-# frame as a LogicalRDD over its in-memory blocks (one cheap JVM job over
-# the cache — no Python round-trip, no recompute), so every downstream
-# action (pair keyset, shingle semi-join scope, both verify join sides,
-# the returned result) analyzes a tiny plan instead of re-walking the full
-# candidate lineage (~400 kB formatted for q33/q140 — measured 1.6-2.6 s
-# of serial per-call driver time across the 4-6 sequential actions).
-# Fault-tolerance trade (why the signature tables do NOT get this): the
-# truncated frame is a measured-small (<= 64 Ki pairs) call-scoped
-# intermediate; losing an executor mid-verify fails the call, and
-# re-running the call costs less than the per-call analysis tax the full
-# lineage charges every action.  (A collect+createDataFrame re-root was
-# tried first and REVERTED: classic PySpark parallelizes local data into
-# a 32-slice Python RDD, so every consumer re-ran Python deserialization
-# tasks and planned SMJs off unknown stats — measured q140 2.13 s -> 4.3 s
-# of stage time.)
-LOCAL_PAIR_LIMIT = 1 << 16
-
-
-def _reroot_small(candidates: DataFrame) -> DataFrame:
-    """Lineage-truncate a measured-small, already-persisted pair frame
-    (see LOCAL_PAIR_LIMIT).  Returns the LogicalRDD-rooted twin and drops
-    the original cache pin; callers release the checkpoint blocks with
-    ``session.free_local_checkpoint`` when done."""
-    # coalesce(1) first: the frame is measured-small, and a single-block
-    # checkpoint makes every downstream distinct/broadcast build a
-    # one-task job instead of shuffle.partitions near-empty tasks
-    cp = candidates.coalesce(1).localCheckpoint(eager=True)
-    candidates.unpersist()
-    return cp
-
-
-def _compute_parallelism(df: DataFrame) -> int:
-    """Partition count for compute-bound stages — delegates to the single
-    policy source, session.compute_parallelism (defaultParallelism,
-    floor 8)."""
-    from apache_arrow_spark.session import compute_parallelism
-
-    try:
-        return compute_parallelism(df.sparkSession)
-    except Exception:
-        return 32
-
 
 # A bucket whose membership reaches this size gets its self-join salted
 # (split into N_SALTS sub-keys) so no single join task emits the whole
@@ -210,7 +161,7 @@ def minhash_signatures(
     # (id, text) rows, never the 100x larger shingle stream.  The partition
     # count is explicit: AQE would coalesce a byte-small exchange to one
     # partition, serializing a compute-bound stage.
-    n_part = _compute_parallelism(df)
+    n_part = compute_parallelism(df.sparkSession)
     # normalize BEFORE the exchange: the shingle transform then operates on
     # a plain attribute (cheap per-row read) instead of inlining the
     # lower/regexp normalization into its guard, bound, and lambda
@@ -334,106 +285,100 @@ def minhash_near_duplicates(
         .select("id_a", "id_b")
         .persist()
     )
-    n_pairs = candidates.count()  # eager for the same reason
-    # The candidate cardinality is now MEASURED, so the verify topology can
-    # be chosen exactly (runtime adaptivity with better information than
-    # AQE's byte estimates): a small candidate set broadcasts — the verify
-    # joins collapse into one shuffle-free stage — while a huge one (mega-
-    # bucket corpora) keeps the scale-safe shuffle equi-join.
-    bcast_cand = n_pairs <= (1 << 21)
-    local_cand = n_pairs <= LOCAL_PAIR_LIMIT
-    if local_cand:
-        # lineage-truncate the measured-small pair set (LOCAL_PAIR_LIMIT):
-        # every later action analyzes a tiny LogicalRDD plan instead of
-        # the full banded-signature lineage — the q33 serial driver share.
-        candidates = _reroot_small(candidates)
-    cand_join = F.broadcast(candidates) if bcast_cand else candidates
-    # shingle sets for exact verification — computed ONLY for docs that
-    # appear in a candidate pair (left-semi on the candidate id set).  At
-    # corpus scale the candidate set is orders of magnitude smaller than the
-    # corpus, so the expensive shingle materialization never touches
-    # non-candidate documents.
-    cand_ids = (
-        candidates.select(F.col("id_a").alias("id"))
-        .union(candidates.select(F.col("id_b").alias("id")))
-        .distinct()
-    )
-    if bcast_cand:
-        cand_ids = F.broadcast(cand_ids)
-    # size the verify stage by the MEASURED candidate cardinality (known,
-    # since candidates just materialized), not the corpus: ~512 docs per
-    # partition, capped at cluster parallelism.  A corpus-width repartition
-    # here would spread a few hundred candidate docs over empty tasks whose
-    # scheduling dominates; a huge candidate set still fans out fully.
-    verify_part = max(1, min(_compute_parallelism(df), (2 * n_pairs) // 512 + 1))
-    # Shingle sets are HASHED to int64 before the pair joins: Jaccard over
-    # distinct xxhash64 values equals Jaccard over the distinct shingle
-    # strings (a collision within one pair's ~2k-element union has
-    # probability ~k^2/2^65 — immaterial even over millions of pairs), and
-    # long-array intersection is ~8x cheaper than UTF8 string intersection
-    # while the join intermediates shrink ~2.5x (8 bytes vs 5-char strings).
-    sh_df = (
-        df.select(F.col(id_col).alias("id"), normalize_text(F.col(text_col)).alias("t"))
-        .join(cand_ids, on="id", how="left_semi")
-        .repartition(verify_part, F.col("id"))
-        .select(
-            "id",
-            F.transform(
-                shingles_of_normalized(F.col("t"), k), lambda s: F.xxhash64(s)
-            ).alias("sh"),
+    # The candidate cardinality is MEASURED here (eager for the same
+    # reason), so the verify topology can be chosen exactly (runtime
+    # adaptivity with better information than AQE's byte estimates): a
+    # small candidate set broadcasts — the verify joins collapse into one
+    # shuffle-free stage — while a huge one (mega-bucket corpora) keeps
+    # the scale-safe shuffle equi-join.  A measured-small set is also
+    # lineage-truncated (session.measured): every later action analyzes a
+    # tiny LogicalRDD plan instead of the full banded-signature lineage —
+    # the q33 serial driver share.
+    with measured(candidates) as (candidates, n_pairs):
+        cand_join = broadcast_if(candidates, n_pairs)
+        # shingle sets for exact verification — computed ONLY for docs
+        # that appear in a candidate pair (left-semi on the candidate id
+        # set).  At corpus scale the candidate set is orders of magnitude
+        # smaller than the corpus, so the expensive shingle
+        # materialization never touches non-candidate documents.
+        cand_ids = broadcast_if(
+            candidates.select(F.col("id_a").alias("id"))
+            .union(candidates.select(F.col("id_b").alias("id")))
+            .distinct(),
+            n_pairs,
         )
-        .select("id", "sh", F.size("sh").alias("ls"))
-        .persist()
-    )
-    # eager: consumed by both sides of the verify join.  (r11 A/B: folding
-    # this materialization into the verify job measured control-corrected
-    # NEUTRAL warm — 2.75 s eager vs 2.67 s folded with a 1.2x-drifting
-    # control — and risks concurrent-stage cache materialization stalls,
-    # so the eager count stays.)
-    sh_df.count()
-    pairs = (
-        cand_join.join(
-            sh_df.select(
-                F.col("id").alias("id_a"), F.col("sh").alias("sh_a"), F.col("ls").alias("la")
-            ),
-            "id_a",
+        # size the verify stage by the MEASURED candidate cardinality, not
+        # the corpus: ~512 docs per partition, capped at cluster
+        # parallelism.  A corpus-width repartition here would spread a few
+        # hundred candidate docs over empty tasks whose scheduling
+        # dominates; a huge candidate set still fans out fully.
+        verify_part = max(
+            1, min(compute_parallelism(df.sparkSession), (2 * n_pairs) // 512 + 1)
         )
-        .join(
-            sh_df.select(
-                F.col("id").alias("id_b"), F.col("sh").alias("sh_b"), F.col("ls").alias("lb")
-            ),
-            "id_b",
+        # Shingle sets are HASHED to int64 before the pair joins: Jaccard
+        # over distinct xxhash64 values equals Jaccard over the distinct
+        # shingle strings (a collision within one pair's ~2k-element union
+        # has probability ~k^2/2^65 — immaterial even over millions of
+        # pairs), and long-array intersection is ~8x cheaper than UTF8
+        # string intersection while the join intermediates shrink ~2.5x
+        # (8 bytes vs 5-char strings).
+        sh_df = (
+            df.select(F.col(id_col).alias("id"), normalize_text(F.col(text_col)).alias("t"))
+            .join(cand_ids, on="id", how="left_semi")
+            .repartition(verify_part, F.col("id"))
+            .select(
+                "id",
+                F.transform(
+                    shingles_of_normalized(F.col("t"), k), lambda s: F.xxhash64(s)
+                ).alias("sh"),
+            )
+            .select("id", "sh", F.size("sh").alias("ls"))
+            .persist()
         )
-        # threshold length prune before any intersection work: J >= t
-        # forces min(|a|,|b|) >= t * max(|a|,|b|) (|a∩b| <= min, |a∪b| >=
-        # max) — a cheap integer predicate Catalyst evaluates ahead of the
-        # jaccard projection, so pruned pairs never pay the array ops.
-        .filter(
-            (F.col("la") >= F.lit(jaccard_threshold) * F.col("lb"))
-            & (F.col("lb") >= F.lit(jaccard_threshold) * F.col("la"))
+        # eager: consumed by both sides of the verify join.  (r11 A/B:
+        # folding this materialization into the verify job measured
+        # control-corrected NEUTRAL warm — 2.75 s eager vs 2.67 s folded
+        # with a 1.2x-drifting control — and risks concurrent-stage cache
+        # materialization stalls, so the eager count stays.)
+        sh_df.count()
+        pairs = (
+            cand_join.join(
+                sh_df.select(
+                    F.col("id").alias("id_a"), F.col("sh").alias("sh_a"), F.col("ls").alias("la")
+                ),
+                "id_a",
+            )
+            .join(
+                sh_df.select(
+                    F.col("id").alias("id_b"), F.col("sh").alias("sh_b"), F.col("ls").alias("lb")
+                ),
+                "id_b",
+            )
+            # threshold length prune before any intersection work: J >= t
+            # forces min(|a|,|b|) >= t * max(|a|,|b|) (|a∩b| <= min,
+            # |a∪b| >= max) — a cheap integer predicate Catalyst evaluates
+            # ahead of the jaccard projection, so pruned pairs never pay
+            # the array ops.
+            .filter(
+                (F.col("la") >= F.lit(jaccard_threshold) * F.col("lb"))
+                & (F.col("lb") >= F.lit(jaccard_threshold) * F.col("la"))
+            )
         )
-    )
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    union = F.size(F.array_union(F.col("sh_a"), F.col("sh_b")))
-    jac = F.round(inter / F.greatest(union, F.lit(1)), 6)
-    result = (
-        pairs.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-    # materialize the (tiny) verified pairs, then drop the intermediate
-    # caches — a long-lived session would otherwise leak block-manager
-    # memory on every call
-    result = result.persist()
-    result.count()
+        inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
+        union = F.size(F.array_union(F.col("sh_a"), F.col("sh_b")))
+        jac = F.round(inter / F.greatest(union, F.lit(1)), 6)
+        # materialize the (tiny) verified pairs before the candidates are
+        # released, then drop the intermediate caches — a long-lived
+        # session would otherwise leak block-manager memory on every call
+        result = (
+            pairs.withColumn("jaccard", jac)
+            .filter(F.col("jaccard") >= jaccard_threshold)
+            .select("id_a", "id_b", "jaccard")
+            .persist()
+        )
+        result.count()
     for c in (sig_arr, sh_df):
         c.unpersist()
-    if local_cand:
-        from apache_arrow_spark.session import free_local_checkpoint
-
-        free_local_checkpoint(candidates)
-    else:
-        candidates.unpersist()
     return result
 
 
@@ -605,101 +550,71 @@ def minhash_near_duplicates_against(
         .select("new_id", "corpus_id")
         .persist()
     )
-    n_pairs = candidates.count()
-    bcast = n_pairs <= (1 << 21)
-    local_cand = n_pairs <= LOCAL_PAIR_LIMIT
-    if local_cand:
-        # lineage-truncate the measured-small candidate set (the
-        # minhash_near_duplicates discipline — see LOCAL_PAIR_LIMIT)
-        candidates = _reroot_small(candidates)
-    new_ids = candidates.select(F.col("new_id").alias("id")).distinct()
-    cor_ids = candidates.select(F.col("corpus_id").alias("id")).distinct()
-    cand_join = F.broadcast(candidates) if bcast else candidates
-    verify_part = max(1, min(_compute_parallelism(new_df), (2 * n_pairs) // 512 + 1))
+    # measured, and lineage-truncated when small (the
+    # minhash_near_duplicates discipline — see session.measured)
+    with measured(candidates) as (candidates, n_pairs):
+        new_ids = candidates.select(F.col("new_id").alias("id")).distinct()
+        cor_ids = candidates.select(F.col("corpus_id").alias("id")).distinct()
+        cand_join = broadcast_if(candidates, n_pairs)
+        verify_part = max(
+            1, min(compute_parallelism(new_df.sparkSession), (2 * n_pairs) // 512 + 1)
+        )
 
-    def shingle_sets(df: DataFrame, ids: DataFrame) -> DataFrame:
-        ids = F.broadcast(ids) if bcast else ids
-        return (
-            df.select(F.col(id_col).alias("id"), normalize_text(F.col(text_col)).alias("t"))
-            .join(ids, on="id", how="left_semi")
-            .repartition(verify_part, F.col("id"))
-            .select(
-                "id",
-                F.transform(
-                    shingles_of_normalized(F.col("t"), k), lambda s: F.xxhash64(s)
-                ).alias("sh"),
+        def shingle_sets(df: DataFrame, ids: DataFrame) -> DataFrame:
+            return (
+                df.select(F.col(id_col).alias("id"), normalize_text(F.col(text_col)).alias("t"))
+                .join(broadcast_if(ids, n_pairs), on="id", how="left_semi")
+                .repartition(verify_part, F.col("id"))
+                .select(
+                    "id",
+                    F.transform(
+                        shingles_of_normalized(F.col("t"), k), lambda s: F.xxhash64(s)
+                    ).alias("sh"),
+                )
+                .select("id", "sh", F.size("sh").alias("ls"))
+                .persist()
             )
-            .select("id", "sh", F.size("sh").alias("ls"))
+
+        sh_new = shingle_sets(new_df, new_ids)
+        sh_cor = shingle_sets(corpus_df, cor_ids)
+        sh_new.count()
+        sh_cor.count()
+        pairs = (
+            cand_join.join(
+                sh_new.select(
+                    F.col("id").alias("new_id"), F.col("sh").alias("sh_a"), F.col("ls").alias("la")
+                ),
+                "new_id",
+            )
+            .join(
+                sh_cor.select(
+                    F.col("id").alias("corpus_id"),
+                    F.col("sh").alias("sh_b"),
+                    F.col("ls").alias("lb"),
+                ),
+                "corpus_id",
+            )
+            .filter(
+                (F.col("la") >= F.lit(jaccard_threshold) * F.col("lb"))
+                & (F.col("lb") >= F.lit(jaccard_threshold) * F.col("la"))
+            )
+        )
+        inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
+        union = F.size(F.array_union(F.col("sh_a"), F.col("sh_b")))
+        jac = F.round(inter / F.greatest(union, F.lit(1)), 6)
+        result = (
+            pairs.withColumn("jaccard", jac)
+            .filter(F.col("jaccard") >= jaccard_threshold)
+            .select("new_id", "corpus_id", "jaccard")
             .persist()
         )
-
-    sh_new = shingle_sets(new_df, new_ids)
-    sh_cor = shingle_sets(corpus_df, cor_ids)
-    sh_new.count()
-    sh_cor.count()
-    pairs = (
-        cand_join.join(
-            sh_new.select(
-                F.col("id").alias("new_id"), F.col("sh").alias("sh_a"), F.col("ls").alias("la")
-            ),
-            "new_id",
-        )
-        .join(
-            sh_cor.select(
-                F.col("id").alias("corpus_id"),
-                F.col("sh").alias("sh_b"),
-                F.col("ls").alias("lb"),
-            ),
-            "corpus_id",
-        )
-        .filter(
-            (F.col("la") >= F.lit(jaccard_threshold) * F.col("lb"))
-            & (F.col("lb") >= F.lit(jaccard_threshold) * F.col("la"))
-        )
-    )
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    union = F.size(F.array_union(F.col("sh_a"), F.col("sh_b")))
-    jac = F.round(inter / F.greatest(union, F.lit(1)), 6)
-    result = (
-        pairs.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("new_id", "corpus_id", "jaccard")
-        .persist()
-    )
-    result.count()
+        result.count()
     internal_caches = [new_sig, sh_new, sh_cor]
-    if not local_cand:
-        internal_caches.append(candidates)
     if corpus_sig_is_internal:
         internal_caches.append(corpus_sig)
     for cch in internal_caches:
         cch.unpersist()
-    if local_cand:
-        from apache_arrow_spark.session import free_local_checkpoint
-
-        free_local_checkpoint(candidates)
     return result
-
-
-def _observed_changed(obs, timeout_s: float = 10.0):
-    """Bounded read of the fixpoint Observation: polls the JVM promise
-    (``getRowOrEmpty`` waits ~100 ms per call) up to ``timeout_s``, then
-    returns None so the caller can fall back to an explicit count job —
-    the blocking ``obs.get`` has no timeout and the listener bus that
-    fulfils it can drop events under load (r10 ADVICE)."""
-    import time as _time
-
-    deadline = _time.monotonic() + timeout_s
-    try:
-        while _time.monotonic() < deadline:
-            row_opt = obs._jo.getRowOrEmpty()
-            if row_opt.isDefined():
-                r = row_opt.get()
-                return int(r.getLong(r.fieldIndex("changed")))
-            _time.sleep(0.05)  # getRowOrEmpty's own wait is bounded
-    except Exception:
-        return None
-    return None
 
 
 def connected_components(
@@ -781,7 +696,7 @@ def connected_components(
                 F.lit(0),
             ).alias("changed"),
         ).localCheckpoint(eager=True)
-        changed = _observed_changed(obs)
+        changed = observed(obs, "changed")
         if changed is None:
             # metrics ride Spark's async listener bus, which can drop
             # SQLExecutionEnd events under load — a blocking obs.get could
@@ -815,8 +730,7 @@ def cluster_assignments(
     id — never a pinned corpus-scale broadcast.
     """
     comp = connected_components(pairs, id_a, id_b)
-    if comp.count() <= BROADCAST_ROW_LIMIT:
-        comp = F.broadcast(comp)
+    comp = broadcast_if(comp, comp.count())
     out = (
         df.select(id_col)
         .join(comp, df[id_col] == comp["node"], "left")
@@ -894,7 +808,7 @@ def simhash(
     """
     tok = (
         df.select(F.col(id_col).alias("id"), F.col(text_col).alias("txt"))
-        .repartition(_compute_parallelism(df), F.col("id"))  # see minhash note
+        .repartition(compute_parallelism(df.sparkSession), F.col("id"))  # see minhash note
         .select("id", F.explode(tokens(F.col("txt"))).alias("t"))
     )
     h = (token_hash or F.xxhash64)(F.col("t"))
@@ -1010,49 +924,38 @@ def _verify_pairs(
     only candidate docs; ``score`` is any expression over the candidate
     columns plus ``inter``.  Unpersists ``cells`` and ``candidates``;
     returns the persisted (id_a, id_b, score_col) result."""
-    n_pairs = candidates.count()
-    local_cand = n_pairs <= LOCAL_PAIR_LIMIT
-    if local_cand:
-        # lineage-truncate the measured-small candidate set (see
-        # LOCAL_PAIR_LIMIT): the pair keyset, both semi-join id scopes and
-        # the final score join then hang off a tiny LogicalRDD plan
-        # instead of re-analyzing the candidate lineage per action (the
-        # q140/q143 driver share, r10 verdict #5).  The LogicalRDD has no
-        # size statistics, so the small-side broadcasts below are hinted
-        # explicitly off the measured count — the same physical joins the
-        # cached frame's accurate stats used to produce.
-        candidates = _reroot_small(candidates)
-    small = n_pairs <= BROADCAST_ROW_LIMIT
-    pair_keys = candidates.select("id_a", "id_b")
-    ids_a = candidates.select(F.col("id_a").alias("id")).distinct()
-    ids_b = candidates.select(F.col("id_b").alias("id")).distinct()
-    if small:
-        pair_keys = F.broadcast(pair_keys)
-        ids_a, ids_b = F.broadcast(ids_a), F.broadcast(ids_b)
-    ca = cells.join(ids_a, "id", "left_semi").select(F.col("id").alias("id_a"), "gram")
-    cb = cells.join(ids_b, "id", "left_semi").select(F.col("id").alias("id_b"), "gram")
-    inter = (
-        pair_keys.join(ca, "id_a")
-        .join(cb, ["id_b", "gram"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    out = (
-        (F.broadcast(candidates) if small else candidates)
-        .join(inter, ["id_a", "id_b"])
-        .withColumn(score_col, score)
-        .filter(F.col(score_col) >= threshold)
-        .select("id_a", "id_b", score_col)
-        .persist()
-    )
-    out.count()
+    with measured(candidates) as (cand, n_pairs):
+        # measured-small candidate sets come back lineage-truncated: the
+        # pair keyset, both semi-join id scopes and the final score join
+        # then hang off a tiny LogicalRDD plan instead of re-analyzing the
+        # candidate lineage per action (the q140/q143 driver share, r10
+        # verdict #5).  The small-side broadcasts are hinted off the
+        # measured count.
+        pair_keys = broadcast_if(cand.select("id_a", "id_b"), n_pairs)
+        ids_a = broadcast_if(cand.select(F.col("id_a").alias("id")).distinct(), n_pairs)
+        ids_b = broadcast_if(cand.select(F.col("id_b").alias("id")).distinct(), n_pairs)
+        ca = cells.join(ids_a, "id", "left_semi").select(F.col("id").alias("id_a"), "gram")
+        cb = cells.join(ids_b, "id", "left_semi").select(F.col("id").alias("id_b"), "gram")
+        inter = (
+            pair_keys.join(ca, "id_a")
+            .join(cb, ["id_b", "gram"])
+            .groupBy("id_a", "id_b")
+            .agg(F.count(F.lit(1)).alias("inter"))
+        )
+        # the wide candidates side of the score join is force-broadcast
+        # only when it was re-rooted (measured() returns a new frame): that
+        # LogicalRDD has no size statistics.  The cached frame keeps its
+        # accurate stats, which pick the join themselves.
+        out = (
+            (F.broadcast(cand) if cand is not candidates else cand)
+            .join(inter, ["id_a", "id_b"])
+            .withColumn(score_col, score)
+            .filter(F.col(score_col) >= threshold)
+            .select("id_a", "id_b", score_col)
+            .persist()
+        )
+        out.count()
     cells.unpersist()
-    if local_cand:
-        from apache_arrow_spark.session import free_local_checkpoint
-
-        free_local_checkpoint(candidates)
-    else:
-        candidates.unpersist()
     return out
 
 
@@ -1100,7 +1003,7 @@ def ngram_jaccard_pairs(
     wseq = Window.partitionBy("id").orderBy("pos")
     base = (
         df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__raw"))
-        .repartition(_compute_parallelism(df), F.col("id"))
+        .repartition(compute_parallelism(df.sparkSession), F.col("id"))
         .select(
             "id",
             F.posexplode(tokens(normalize_text(F.col("__raw")))).alias("pos", "w"),
@@ -1189,8 +1092,8 @@ def ngram_jaccard_pairs(
         .select("id_a", "id_b", "la", "lb")
         .persist()
     )
-    # _verify_pairs' own n_pairs = candidates.count() materializes the
-    # cache; counting here too was a duplicate job (same cached rows)
+    # _verify_pairs' measured() count materializes the cache; counting
+    # here too was a duplicate job (same cached rows)
     union = F.col("la") + F.col("lb") - F.col("inter")
     jac = F.round(F.col("inter") / F.greatest(union, F.lit(1)), 6)
     return _verify_pairs(cells, candidates, jac, "jaccard", t)
@@ -1245,7 +1148,7 @@ def shingle_containment_pairs(
     # (id, raw text) rows — ~1% of the exploded cell volume.
     cells = (
         df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__raw"))
-        .repartition(_compute_parallelism(df), F.col("id"))
+        .repartition(compute_parallelism(df.sparkSession), F.col("id"))
         .select("id", normalize_text(F.col("__raw")).alias("t"))
         .filter(F.length("t") >= k)
         .select(

@@ -185,7 +185,12 @@ def bfs_khop(
     is static; each round is localCheckpointed to keep lineage flat
     (the q79 connected-components discipline) and the superseded
     round's blocks are freed eagerly (the q78 lesson)."""
-    from apache_arrow_spark.session import compute_parallelism, free_local_checkpoint
+    from apache_arrow_spark.session import (
+        broadcast_if,
+        compute_parallelism,
+        free_local_checkpoint,
+        observed,
+    )
 
     spark = edges.sparkSession
     und = (
@@ -217,14 +222,9 @@ def bfs_khop(
         nxt = frontier.join(und, frontier["node"] == und["a"]).select(
             F.col("b").alias("node")
         )
-        anti_side = (
-            F.broadcast(dist)
-            if n_dist is not None and n_dist <= 1 << 20
-            else dist
-        )
         new_nodes = (
             nxt.distinct()
-            .join(anti_side, "node", "left_anti")
+            .join(broadcast_if(dist, n_dist), "node", "left_anti")
             .select("node", F.lit(hop).alias("dist"))
         )
         from pyspark.sql import Observation
@@ -239,26 +239,6 @@ def bfs_khop(
         frontier = merged.filter(F.col("dist") == hop)
         free_local_checkpoint(dist)
         dist = merged
-        n_dist = _observed_count(obs)
+        n_dist = observed(obs, "n")
     und.unpersist()
     return dist
-
-
-def _observed_count(obs, timeout_s: float = 5.0):
-    """Bounded read of a row-count Observation (metric ``n``): polls the
-    JVM promise up to ``timeout_s`` and returns None when the metric never
-    arrives (dropped listener event) — the caller then simply skips the
-    broadcast hint, which is always safe."""
-    import time as _time
-
-    deadline = _time.monotonic() + timeout_s
-    try:
-        while _time.monotonic() < deadline:
-            row_opt = obs._jo.getRowOrEmpty()
-            if row_opt.isDefined():
-                r = row_opt.get()
-                return int(r.getLong(r.fieldIndex("n")))
-            _time.sleep(0.05)
-    except Exception:
-        return None
-    return None

@@ -80,7 +80,7 @@ def importance_weights(
     double, and each bucket's log-ratio is quantized to
     ``floor(x * 10**ndigits)`` int64 before any aggregation touches it.
     """
-    from apache_arrow_spark.functions.dedup import _compute_parallelism
+    from apache_arrow_spark.session import compute_parallelism
 
     hash_fn = token_hash or md5_hash60
     # repartition the (id, flag, text) rows BEFORE the explode: spreads the
@@ -88,7 +88,7 @@ def importance_weights(
     # rationale as the MinHash signature stage)
     base = df.select(
         F.col(id_col).alias("id"), target.alias("is_t"), F.col(text_col).alias("t")
-    ).repartition(_compute_parallelism(df), F.col("id"))
+    ).repartition(compute_parallelism(df.sparkSession), F.col("id"))
     stream = base.select(
         "id", "is_t", F.explode(unigrams_and_bigrams(F.col("t"))).alias("g")
     ).select("id", "is_t", F.pmod(hash_fn(F.col("g")), F.lit(num_buckets)).alias("b"))

@@ -698,14 +698,7 @@ def image_near_duplicates(
             )
         ).alias("e"),
     ).select("rep", "n", "e.blk", "e.v")
-    try:
-        # guard unevaluable (Spark Connect: no sparkContext) — the safe
-        # fallback is the identity, the spread_compute posture
-        blocks = blocks.repartition(
-            compute_parallelism(media_df.sparkSession), "blk", "v"
-        )
-    except Exception:
-        pass
+    blocks = blocks.repartition(compute_parallelism(media_df.sparkSession), "blk", "v")
     a, b = blocks.alias("a"), blocks.alias("b")
     cand = (
         a.join(

@@ -36,10 +36,6 @@ def token_count(text: Column) -> Column:
     return F.size(tokens(text)).cast("bigint")
 
 
-def char_count(text: Column) -> Column:
-    return F.length(text).cast("bigint")
-
-
 def punct_count(text: Column) -> Column:
     return (F.length(text) - F.length(F.regexp_replace(text, PUNCT_CLASS, ""))).cast("bigint")
 

@@ -13,9 +13,13 @@ from __future__ import annotations
 
 import os
 import tempfile
+import time
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from apache_arrow_spark.log import warn_once
 
 
 def default_cpus() -> int:
@@ -131,11 +135,14 @@ def spread_compute(df: DataFrame, *key_cols: str) -> DataFrame:
         target = compute_parallelism(df.sparkSession)
         if df.rdd.getNumPartitions() >= target:
             return df
-    except Exception:
+    except Exception as e:
         # guard unevaluable (e.g. Spark Connect: no sparkContext / rdd) —
         # the SAFE fallback is the identity: forcing a repartition here
         # would inflict the full raw re-shuffle on exactly the well-split
         # cluster datasets the guard exists to protect
+        warn_once(
+            "spread_compute", "spread_compute guard unevaluable (%s): identity", e
+        )
         return df
     if key_cols:
         return df.repartition(target, *[F.col(c) for c in key_cols])
@@ -162,10 +169,101 @@ def free_local_checkpoint(df: DataFrame) -> bool:
 
 
 def compute_parallelism(spark: SparkSession) -> int:
-    """THE partition-count policy for compute-bound stages (single source
-    of truth — dedup._compute_parallelism and every spread site delegate
-    here): cluster default parallelism, floor 8."""
-    return max(spark.sparkContext.defaultParallelism, 8)
+    """THE partition-count policy for compute-bound stages: cluster default
+    parallelism, floor 8.  Without a ``sparkContext`` (Spark Connect) it is
+    the session's ``spark.sql.shuffle.partitions``, which ``get_spark`` and
+    ``apply_runtime_confs`` derive from ``default_cpus``."""
+    try:
+        return max(spark.sparkContext.defaultParallelism, 8)
+    except Exception as e:
+        warn_once(
+            "compute_parallelism", "no sparkContext (%s): using shuffle.partitions", e
+        )
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+
+# One policy for "small enough to broadcast after measuring": every
+# measured-cardinality broadcast hint goes through broadcast_if, so the
+# threshold sites can never drift apart.
+BROADCAST_ROW_LIMIT = 1 << 20
+
+# At or below this measured cardinality, measured() TRUNCATES a frame's
+# lineage: localCheckpoint re-roots the already-cached frame as a
+# LogicalRDD over its in-memory blocks (one cheap JVM job over the cache
+# — no Python round-trip, no recompute), so every downstream action (pair
+# keyset, shingle semi-join scope, both verify join sides, the returned
+# result) analyzes a tiny plan instead of re-walking the full candidate
+# lineage (~400 kB formatted for q33/q140 — measured 1.6-2.6 s of serial
+# per-call driver time across the 4-6 sequential actions).
+# Fault-tolerance trade (why the signature tables do NOT get this): the
+# truncated frame is a measured-small (<= 64 Ki rows) call-scoped
+# intermediate; losing an executor mid-verify fails the call, and
+# re-running the call costs less than the per-call analysis tax the full
+# lineage charges every action.  (A collect+createDataFrame re-root was
+# tried first and REVERTED: classic PySpark parallelizes local data into
+# a 32-slice Python RDD, so every consumer re-ran Python deserialization
+# tasks and planned SMJs off unknown stats — measured q140 2.13 s -> 4.3 s
+# of stage time.)
+LOCAL_PAIR_LIMIT = 1 << 16
+
+
+@contextmanager
+def measured(df: DataFrame):
+    """Count the persisted ``df`` and yield ``(frame, n_rows)``: at or
+    below ``LOCAL_PAIR_LIMIT`` rows ``frame`` is a lineage-truncated twin
+    (``df``'s cache pin is dropped), else ``df`` itself.  On exit, also
+    when the body raises, the rows are released from whichever holds them,
+    so the body must materialize what it returns.  The twin has no size
+    statistics: hint its joins off ``n_rows`` (``broadcast_if``)."""
+    n_rows = df.count()
+    frame = df
+    if n_rows <= LOCAL_PAIR_LIMIT:
+        # coalesce(1) first: a single-block checkpoint makes every
+        # downstream distinct/broadcast build a one-task job instead of
+        # shuffle.partitions near-empty tasks
+        frame = df.coalesce(1).localCheckpoint(eager=True)
+        df.unpersist()
+    try:
+        yield frame, n_rows
+    finally:
+        if frame is df:
+            df.unpersist()
+        else:
+            free_local_checkpoint(frame)
+
+
+def broadcast_if(df: DataFrame, n_rows: int | None) -> DataFrame:
+    """THE broadcast gate: hint ``df`` when its MEASURED row count is known
+    and at most ``BROADCAST_ROW_LIMIT``; otherwise the planner decides."""
+    if n_rows is not None and n_rows <= BROADCAST_ROW_LIMIT:
+        return F.broadcast(df)
+    return df
+
+
+def observed(obs, metric: str, timeout_s: float = 10.0) -> int | None:
+    """Bounded read of the long ``metric`` of an ``Observation``.  The
+    blocking ``obs.get`` has no timeout and the listener bus that fulfils
+    it can drop events under load, so this polls the JVM promise
+    (``getRowOrEmpty`` waits ~100 ms per call) up to ``timeout_s``.  None
+    means unknown — a timeout or an unusable JVM handle, each logged once
+    per process — and the caller takes an exact fallback."""
+    deadline = time.monotonic() + timeout_s
+    try:
+        while time.monotonic() < deadline:
+            row_opt = obs._jo.getRowOrEmpty()
+            if row_opt.isDefined():
+                r = row_opt.get()
+                return int(r.getLong(r.fieldIndex(metric)))
+            time.sleep(0.05)  # getRowOrEmpty's own wait is bounded
+    except Exception as e:
+        warn_once(
+            "observed.handle", "Observation handle failed (%s): %r unknown", e, metric
+        )
+        return None
+    warn_once(
+        "observed.timeout", "Observation %r not delivered in %.1f s", metric, timeout_s
+    )
+    return None
 
 
 def _pid_alive(pid: int) -> bool:
@@ -208,7 +306,6 @@ def _reap_orphan_local_dirs(root: str) -> None:
     Only ever called on a root the engine itself owns (path guard in
     get_spark), never on a user-supplied SPARK_GRAFT_LOCAL_DIR."""
     import shutil
-    import time as _time
 
     try:
         children = os.listdir(root)
@@ -230,7 +327,7 @@ def _reap_orphan_local_dirs(root: str) -> None:
         else:
             grace = 24 * 3600
         try:
-            if _time.time() - os.stat(path).st_mtime <= grace:
+            if time.time() - os.stat(path).st_mtime <= grace:
                 continue
         except OSError:
             continue  # vanished or unstat-able — spare it

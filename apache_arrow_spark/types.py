@@ -215,19 +215,6 @@ def spark_to_arrow_type(st: T.DataType, meta: dict | None = None) -> pa.DataType
     raise NotImplementedError(f"no arrow mapping for spark type {st}")
 
 
-def spark_to_arrow_schema(schema: T.StructType) -> pa.Schema:
-    return pa.schema(
-        [
-            pa.field(
-                f.name,
-                spark_to_arrow_type(f.dataType, (f.metadata or {}).get(ARROW_META_KEY)),
-                nullable=f.nullable,
-            )
-            for f in schema.fields
-        ]
-    )
-
-
 def roundtrip_lossless(at: pa.DataType) -> bool:
     """True when arrow->spark->arrow returns the identical type."""
     st, meta = arrow_to_spark_type(at)

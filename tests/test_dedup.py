@@ -4,6 +4,7 @@ SimHash pigeonhole completeness."""
 import itertools
 
 import pyspark.sql.functions as F
+import pytest
 
 from apache_arrow_spark.functions.dedup import (
     exact_dedup,
@@ -381,24 +382,140 @@ def test_remove_duplicated_spans_fully_covered_doc(spark):
     assert out[2]["cleaned_text"] == ""
 
 
-def test_observed_changed_bounded_wait_returns_none_without_action(spark):
+def test_observed_changed_bounded_wait_returns_none_without_action(
+    spark, monkeypatch, caplog
+):
     """The fixpoint's Observation read must be BOUNDED: an observation
     whose action never completes (stand-in for a dropped listener event)
     returns None within the timeout instead of blocking forever, which is
-    what routes connected_components to its explicit-count fallback."""
+    what routes connected_components to its explicit-count fallback.  The
+    timeout is logged once per process."""
+    import logging
     import time
 
     from pyspark.sql import Observation
     import pyspark.sql.functions as F
 
-    from apache_arrow_spark.functions.dedup import _observed_changed
+    import apache_arrow_spark.log as log_mod
+    from apache_arrow_spark.session import observed
 
+    monkeypatch.setattr(log_mod, "_warned", set())
     obs = Observation()
     df = spark.range(10).observe(obs, F.count(F.lit(1)).alias("changed"))
     # deliberately NO action on df: the promise never completes
     t0 = time.monotonic()
-    assert _observed_changed(obs, timeout_s=0.5) is None
+    with caplog.at_level(logging.WARNING, logger="apache_arrow_spark"):
+        assert observed(obs, "changed", timeout_s=0.5) is None
+        assert observed(obs, "changed", timeout_s=0.1) is None
     assert time.monotonic() - t0 < 5.0
+    warns = [r for r in caplog.records if r.name == "apache_arrow_spark"]
+    assert len(warns) == 1 and "not delivered" in warns[0].getMessage()
     # after the action runs, the same observation resolves to the metric
     df.write.format("noop").mode("overwrite").save()
-    assert _observed_changed(obs, timeout_s=10.0) == 10
+    assert observed(obs, "changed", timeout_s=10.0) == 10
+
+
+def test_observed_unusable_handle_returns_none_and_warns_once(monkeypatch, caplog):
+    """A JVM handle that fails (e.g. renamed by a PySpark upgrade) reads
+    as unknown at once, under its own once-per-process WARN — distinct
+    from the timeout's."""
+    import logging
+    import types
+
+    import apache_arrow_spark.log as log_mod
+    from apache_arrow_spark.session import observed
+
+    monkeypatch.setattr(log_mod, "_warned", {"observed.timeout"})
+    broken = types.SimpleNamespace(_jo=None)
+    with caplog.at_level(logging.WARNING, logger="apache_arrow_spark"):
+        assert observed(broken, "n") is None
+        assert observed(broken, "n") is None
+    warns = [r for r in caplog.records if r.name == "apache_arrow_spark"]
+    assert len(warns) == 1 and "handle failed" in warns[0].getMessage()
+
+
+def _synthetic_corpus(n_base=16, seed=11):
+    """Random word documents, each followed by a copy with three words
+    replaced: a near-duplicate pair per base document."""
+    import random
+
+    rng = random.Random(seed)
+    vocab = [f"tok{i}" for i in range(400)]
+    rows = []
+    for i in range(n_base):
+        words = [rng.choice(vocab) for _ in range(30)]
+        rows.append((2 * i, " ".join(words)))
+        for j in rng.sample(range(30), 3):
+            words[j] = rng.choice(vocab)
+        rows.append((2 * i + 1, " ".join(words)))
+    return rows
+
+
+def _minhash_self(docs):
+    return minhash_near_duplicates(docs, jaccard_threshold=0.5)
+
+
+def _minhash_against(docs):
+    from apache_arrow_spark.functions.dedup import minhash_near_duplicates_against
+
+    odd = F.col("doc_id") % 2 == 1
+    return minhash_near_duplicates_against(
+        docs.filter(odd), docs.filter(~odd), jaccard_threshold=0.5
+    )
+
+
+def _ngram_pairs(docs):
+    from apache_arrow_spark.functions.dedup import ngram_jaccard_pairs
+
+    return ngram_jaccard_pairs(docs, jaccard_threshold=0.4)
+
+
+def _persistent_rdd_ids(spark):
+    return set(dict(spark.sparkContext._jsc.getPersistentRDDs()).keys())
+
+
+@pytest.mark.parametrize("op", [_minhash_self, _minhash_against, _ngram_pairs])
+def test_rerooted_and_cached_verify_paths_agree_and_release(spark, monkeypatch, op):
+    """session.measured's two paths — candidates re-rooted as a local
+    checkpoint, or kept as the cached frame (forced with LOCAL_PAIR_LIMIT
+    = 0) — return identical rows, and after ``result.unpersist()`` neither
+    leaves a persisted RDD behind."""
+    import apache_arrow_spark.session as session
+
+    freed = []
+    real_free = session.free_local_checkpoint
+    monkeypatch.setattr(
+        session, "free_local_checkpoint", lambda df: freed.append(real_free(df))
+    )
+    docs = spark.createDataFrame(_synthetic_corpus(), "doc_id bigint, text string")
+
+    def run():
+        before = _persistent_rdd_ids(spark)
+        result = op(docs)
+        rows = sorted(tuple(r) for r in result.collect())
+        result.unpersist()
+        assert _persistent_rdd_ids(spark) - before == set()
+        return rows
+
+    rerooted = run()
+    assert freed == [True]  # the measured-small candidates were re-rooted
+    monkeypatch.setattr(session, "LOCAL_PAIR_LIMIT", 0)
+    cached = run()
+    assert freed == [True]  # ... and the forced path kept the cached frame
+    assert rerooted == cached
+    assert len(rerooted) >= 8
+
+
+@pytest.mark.parametrize("limit", [1 << 16, 0])
+def test_measured_releases_blocks_when_body_raises(spark, monkeypatch, limit):
+    import apache_arrow_spark.session as session
+
+    monkeypatch.setattr(session, "LOCAL_PAIR_LIMIT", limit)
+    before = _persistent_rdd_ids(spark)
+    df = spark.range(100).persist()
+    with pytest.raises(RuntimeError):
+        with session.measured(df) as (frame, n):
+            assert n == 100 and (frame is df) == (limit == 0)
+            assert _persistent_rdd_ids(spark) - before
+            raise RuntimeError("body failed")
+    assert _persistent_rdd_ids(spark) - before == set()

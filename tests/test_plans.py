@@ -911,3 +911,69 @@ def test_default_cpus_follows_env_then_affinity(monkeypatch):
     assert default_cpus() == 3
     monkeypatch.delenv("SPARK_GRAFT_CPUS")
     assert default_cpus() == len(os.sched_getaffinity(0))
+
+
+class _NoContextSession:
+    """A session stand-in whose ``sparkContext`` is unreachable, as on
+    Spark Connect; everything else is the real session."""
+
+    def __init__(self, spark):
+        self._spark = spark
+
+    @property
+    def sparkContext(self):
+        raise RuntimeError("sparkContext is not available")
+
+    def __getattr__(self, name):
+        return getattr(self._spark, name)
+
+
+def test_compute_parallelism_falls_back_to_shuffle_partitions(spark, monkeypatch, caplog):
+    """Without a sparkContext the partition policy is the session's
+    ``spark.sql.shuffle.partitions`` — never a constant — and the degrade
+    logs one WARN per process."""
+    import logging
+
+    import apache_arrow_spark.log as log_mod
+    from apache_arrow_spark.session import compute_parallelism
+
+    monkeypatch.setattr(log_mod, "_warned", set())
+    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    stub = _NoContextSession(spark)
+    with caplog.at_level(logging.WARNING, logger="apache_arrow_spark"):
+        assert compute_parallelism(stub) == shuffle
+        assert compute_parallelism(stub) == shuffle
+    warns = [r for r in caplog.records if r.name == "apache_arrow_spark"]
+    assert len(warns) == 1 and "sparkContext" in warns[0].getMessage()
+
+
+def test_spread_compute_unevaluable_guard_is_identity_and_warns(monkeypatch, caplog):
+    import logging
+    import types
+
+    import apache_arrow_spark.log as log_mod
+    from apache_arrow_spark.session import spread_compute
+
+    monkeypatch.setattr(log_mod, "_warned", set())
+    df = types.SimpleNamespace()  # no sparkSession, no rdd: guard unevaluable
+    with caplog.at_level(logging.WARNING, logger="apache_arrow_spark"):
+        assert spread_compute(df) is df
+        assert spread_compute(df, "k") is df
+    warns = [r for r in caplog.records if r.name == "apache_arrow_spark"]
+    assert len(warns) == 1 and "spread_compute" in warns[0].getMessage()
+
+
+def test_private_observation_handle_only_in_session():
+    """``obs._jo`` is a private PySpark handle: only session.observed, which
+    has a tested fallback, may touch it."""
+    import pathlib
+
+    import apache_arrow_spark
+
+    root = pathlib.Path(apache_arrow_spark.__file__).parent
+    offenders = [
+        str(p.relative_to(root))
+        for p in root.rglob("*.py")
+        if p != root / "session.py" and "._jo." in p.read_text()
+    ]
+    assert offenders == []
