@@ -15,7 +15,9 @@ Scale design (the part that matters at 100 TB):
 
 from __future__ import annotations
 
+import operator
 import random
+from functools import reduce
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
@@ -35,95 +37,90 @@ from apache_arrow_spark.session import broadcast_if, compute_parallelism, measur
 _rng = random.Random(0xA44)
 XOR_MASKS = [_rng.getrandbits(63) for _ in range(64)]
 
-# A bucket whose membership reaches this size gets its self-join salted
-# (split into N_SALTS sub-keys) so no single join task emits the whole
-# m^2/2 pair flood; buckets below it keep the plain equi-join.  4096 was
-# chosen so the cold path covers every real corpus bucket observed at
-# sf0.1 (max measured bucket ~60) while a pathological boilerplate flood
-# (10^4+ near-identical docs -> one bucket per band) gets split before a
-# single task would emit 5*10^7 pairs.
+# A join key whose membership reaches this size gets salted (split into
+# N_BUCKET_SALTS sub-keys) so no single join task emits the whole pair
+# flood; keys below it keep the plain equi-join.  4096 was chosen so the
+# cold path covers every real corpus key observed at sf0.1 (max measured
+# LSH band bucket 152, max char-9-gram document frequency 3,825) while a
+# pathological boilerplate flood (10^4+ near-identical docs -> one bucket
+# per band) gets split before a single task would emit 5*10^7 pairs.
+# _hot_key_join reads both at call time.
 HOT_BUCKET_ROWS = 4096
-HOT_BUCKET_TOP_K = 10_000  # driver-side hot-key list stays bounded
 N_BUCKET_SALTS = 16
+
+
+def _hot_key_join(
+    a: DataFrame,
+    b: DataFrame,
+    key_cols: list,
+    a_id: str,
+    sizes: DataFrame,
+    precheck: DataFrame | None = None,
+) -> DataFrame:
+    """Skew-balanced equi-join of ``a`` and ``b`` on ``key_cols`` — the
+    one salting policy behind every candidate join here (LSH bands,
+    simhash chunks, prefix grams, batch-vs-corpus bands, containment
+    probe grams; the skew-aware filter-verify partitioning of REPOSE).
+    The sides come back aliased ``a`` and ``b``: callers select
+    ``a.<col>`` / ``b.<col>`` and add their own pair filter, dedup or
+    pair-count aggregate.
+
+    ``sizes`` (key_cols + ``__n``) decides hotness: a key is hot when its
+    ``__n`` reaches ``HOT_BUCKET_ROWS``.  It must hold every key the two
+    sides share — the self joins pass their own bucket sizes, the
+    batch-vs-corpus join the corpus band sizes, containment its probe-side
+    gram counts.
+
+    Skew defense in two tiers.  A bounded ``limit(1)`` existence check
+    decides whether ANY key may be hot — over ``precheck`` when the
+    caller has a cheaper conservative frame whose non-emptiness implies
+    "a hot key may exist" (q140/q143 pass their cached gram df table:
+    probe and prefix counts <= df), else over ``sizes`` itself.  The
+    common corpus has no hot key and takes the EXACT plain equi-join —
+    the check is the only overhead (one small job; the always-on sizes
+    join of the first cut cost q33/q140 +1.6 s each at sf0.1).
+
+    Hot path — conditional salting, one declarative plan: ``sizes``
+    inner-joins onto both sides (a key missing from it has no partner);
+    hot ``a`` rows take a salt derived from ``a_id``, hot ``b`` rows
+    explode to every salt, so each matching row pair still meets EXACTLY
+    once while no task emits more than ~1/N_BUCKET_SALTS of a flood key's
+    output.  Cold rows ride salt 0 on both sides; no driver-side key list,
+    no cap on how many keys may run hot."""
+    hot = F.col("__n") >= F.lit(HOT_BUCKET_ROWS)
+    cond = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in key_cols]
+    if (sizes.filter(hot) if precheck is None else precheck).limit(1).count() > 0:
+        zero = F.lit(0).cast("bigint")
+        salt = F.pmod(F.xxhash64(F.col(a_id), F.lit(0x5317)), F.lit(N_BUCKET_SALTS))
+        every = F.sequence(zero, F.lit(N_BUCKET_SALTS - 1).cast("bigint"))
+        a = a.join(sizes, key_cols).withColumn("__salt", F.when(hot, salt).otherwise(zero))
+        b = b.join(sizes, key_cols).withColumn(
+            "__salt", F.explode(F.when(hot, every).otherwise(F.array(zero)))
+        )
+        cond.append(F.col("a.__salt") == F.col("b.__salt"))
+    return a.alias("a").join(b.alias("b"), reduce(operator.and_, cond))
 
 
 def _bucket_self_join_pairs(
     bucketed: DataFrame,
     key_cols: list,
     carry_cols: tuple = (),
-    hot_rows: int = HOT_BUCKET_ROWS,
-    n_salts: int = N_BUCKET_SALTS,
     distinct: bool = True,
-    hot_precheck: DataFrame | None = None,
+    precheck: DataFrame | None = None,
 ) -> DataFrame:
-    """Skew-balanced candidate generation shared by the LSH-band,
-    pigeonhole, and prefix-filter joins (r9 verdict #5): self-join
-    ``bucketed`` (columns ``id`` + key_cols + carry_cols) on key_cols
-    with ``id_a < id_b``; ``distinct`` dedups the pair (the LSH/banding
-    callers), ``distinct=False`` keeps one row per (key, pair) match
-    (the PPJoin caller, whose downstream pair-count aggregate needs
-    every gram co-occurrence).
-
-    Skew defense in two tiers.  A bounded ``limit(1)`` existence check
-    decides whether ANY bucket reaches ``hot_rows`` — ``hot_precheck``
-    lets the caller supply a cheaper (possibly conservative) frame
-    whose non-emptiness implies "a hot bucket may exist" (q140 passes
-    the already-cached gram df table: prefix counts <= df), else the
-    check aggregates ``bucketed`` itself.  The common corpus has no hot
-    bucket (max sf0.1 band bucket ~60) and takes the EXACT pre-salting
-    single equi-join — the check is the only overhead (one small job;
-    the always-on sizes join of the first cut cost q33/q140 +1.6 s each
-    at sf0.1, caught by the r10 bench).
-
-    Hot path — conditional salting, one declarative plan: bucket sizes
-    join back onto the rows; rows in a bucket of >= ``hot_rows`` ids —
-    the 10^4-near-identical-docs pathology, where one join key makes a
-    single task emit m^2/2 pairs — join on an extra salt sub-key: the
-    a-side's salt is derived from its id, the b-side explodes all
-    ``n_salts`` values, so each qualifying pair still matches EXACTLY
-    once while no task emits more than ~m^2/n_salts of the flood.
-    Cold-bucket rows there ride salt 0 on both sides; no driver-side
-    key list, no cap on how many buckets may run hot."""
-    out_a = [F.col("a.id").alias("id_a")] + [
-        F.col(f"a.{c}").alias(f"{c}_a") for c in carry_cols
-    ]
-    out_b = [F.col("b.id").alias("id_b")] + [
-        F.col(f"b.{c}").alias(f"{c}_b") for c in carry_cols
-    ]
+    """Candidate pairs of the LSH-band, pigeonhole and prefix-filter
+    self-joins: ``bucketed`` (columns ``id`` + key_cols + carry_cols)
+    joined with itself on key_cols through :func:`_hot_key_join`, with
+    ``id_a < id_b``.  ``distinct`` dedups the pair (the LSH/banding
+    callers); ``distinct=False`` keeps one row per (key, pair) match (the
+    PPJoin caller, whose downstream pair-count aggregate needs every gram
+    co-occurrence)."""
     sizes = bucketed.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("__n"))
-    probe = (
-        hot_precheck
-        if hot_precheck is not None
-        else sizes.filter(F.col("__n") >= F.lit(hot_rows))
+    pairs = (
+        _hot_key_join(bucketed, bucketed, key_cols, "id", sizes, precheck)
+        .filter(F.col("a.id") < F.col("b.id"))
+        .select(*[F.col(f"{s}.{c}").alias(f"{c}_{s}") for s in "ab" for c in ("id", *carry_cols)])
     )
-    if probe.limit(1).count() == 0:
-        a, b = bucketed.alias("a"), bucketed.alias("b")
-        cond = F.col("a.id") < F.col("b.id")
-        for k in key_cols:
-            cond = (F.col(f"a.{k}") == F.col(f"b.{k}")) & cond
-        pairs = a.join(b, cond).select(*out_a, *out_b)
-        return pairs.dropDuplicates(["id_a", "id_b"]) if distinct else pairs
-    tagged = bucketed.join(sizes, key_cols)
-    hot = F.col("__n") >= F.lit(hot_rows)
-    zero = F.array(F.lit(0).cast("bigint"))
-    a = tagged.withColumn(
-        "__salt",
-        F.when(
-            hot, F.pmod(F.xxhash64(F.col("id"), F.lit(0x5317)), F.lit(n_salts))
-        ).otherwise(F.lit(0).cast("bigint")),
-    ).alias("a")
-    b = tagged.withColumn(
-        "__salt",
-        F.explode(
-            F.when(
-                hot, F.sequence(F.lit(0).cast("bigint"), F.lit(n_salts - 1).cast("bigint"))
-            ).otherwise(zero)
-        ),
-    ).alias("b")
-    cond = (F.col("a.__salt") == F.col("b.__salt")) & (F.col("a.id") < F.col("b.id"))
-    for k in key_cols:
-        cond = (F.col(f"a.{k}") == F.col(f"b.{k}")) & cond
-    pairs = a.join(b, cond).select(*out_a, *out_b)
     return pairs.dropDuplicates(["id_a", "id_b"]) if distinct else pairs
 
 
@@ -177,92 +174,74 @@ def minhash_signatures(
     return hashed.groupBy("id").agg(*mins)
 
 
-def minhash_near_duplicates(
+def minhash_sig_array(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     num_hashes: int = 64,
-    bands: int = 16,
     k: int = 5,
-    jaccard_threshold: float = 0.8,
-    est_margin: float | None = None,
-    hot_bucket_rows: int = HOT_BUCKET_ROWS,
 ) -> DataFrame:
-    """Near-duplicate pairs (id_a < id_b, jaccard >= threshold).
-
-    Pipeline: signatures -> band bucket ids -> bucket equi-join (candidate
-    generation is a shuffle on (band, bucket) keys only) -> signature-
-    estimate prune -> exact Jaccard verification, joining the surviving
-    candidates (small) back to the shingle sets by id.  Returns
-    (id_a, id_b, jaccard).
-
-    The estimate prune is the stage that makes boilerplate-heavy corpora
-    tractable: band buckets admit pairs well below the threshold (16 bands
-    x 4 rows has its S-curve midpoint near J~0.5), so the candidate set can
-    be orders of magnitude larger than the true near-dup set (measured 123k
-    candidates -> 256 true pairs on the sf0.1 documents table).  Comparing
-    the two 64-long signatures estimates J with std sqrt(J(1-J)/num_hashes)
-    ~0.05, at ~1% of the cost of a shingle-set intersection; pruning at
-    ``threshold - est_margin`` (default margin 4 sigma ~0.2) drops the
-    sub-threshold flood before the expensive exact verify.  The prune is
-    probabilistic in the same sense LSH banding already is: a true pair at
-    exactly the threshold escapes with probability ~3e-5 (4 sigma), far
-    below the banding miss rate the scheme already accepts.  Pass
-    ``est_margin=1.0`` to disable the prune entirely.
-
-    The returned DataFrame is persisted (eagerly materialized, tiny); the
-    heavyweight intermediates are unpersisted before returning.  Callers
-    holding the result long-term may ``.unpersist()`` it when done.
-    """
-    rows_per_band = num_hashes // bands
-    if est_margin is None:
-        est_margin = 4.0 * (
-            (jaccard_threshold * (1.0 - jaccard_threshold) / num_hashes) ** 0.5
-        )
+    """(id, sig array<bigint>) — the materializable signature-store form of
+    :func:`minhash_signatures`.  Persist this as parquet once per ingested
+    corpus (num_hashes longs/doc) and hand it to
+    :func:`minhash_near_duplicates_against`; the corpus TEXT is then only
+    touched to verify the (tiny) candidate set."""
     sig = minhash_signatures(df, text_col, id_col, num_hashes, k)
-    # persist the signature ARRAY once: it feeds band-bucket generation
-    # (both sides of the self-join) and the estimate prune.  num_hashes
-    # longs per doc — tiny.  It must be materialized EAGERLY before any
-    # job consumes it twice (racing lazy materialization from multiple
-    # consumers causes double-compute / cache-lock stalls) — but the
-    # hot-bucket existence probe inside _bucket_self_join_pairs is
-    # itself a full pass over the banded signatures, so THAT job doubles
-    # as the materialization and a separate count() would be a whole
-    # extra job of driver work (measured 0.3-0.4 s of q33's wall at
-    # sf0.1: analysis + scheduling, the stage itself is trivial).
-    sig_arr = sig.select(
+    return sig.select(
         "id", F.array(*[F.col(f"m{j}") for j in range(num_hashes)]).alias("sig")
-    ).persist()
-    band_structs = [
+    )
+
+
+def _band_keys(sig_arr: DataFrame, bands: int, num_hashes: int) -> DataFrame:
+    """(id, band, bucket) LSH band keys of an (id, sig) signature frame.
+    The explode is cheap to recompute per consumer off a cached
+    signature frame — no second persist needed."""
+    rows_per_band = num_hashes // bands
+    structs = [
         F.struct(
             F.lit(b).alias("band"),
             # multi-arg xxhash64 over the band's raw longs — no casts, no
             # string concat; a far smaller codegen'd expression tree
             F.xxhash64(
-                *[
-                    F.element_at("sig", b * rows_per_band + j + 1)
-                    for j in range(rows_per_band)
-                ]
+                *[F.element_at("sig", b * rows_per_band + j + 1) for j in range(rows_per_band)]
             ).alias("bucket"),
         )
         for b in range(bands)
     ]
-    # banded derives from the cached signature arrays — the explode is
-    # cheap to recompute per consumer, no second persist needed
-    banded = sig_arr.select("id", F.explode(F.array(*band_structs)).alias("bb")).select(
+    return sig_arr.select("id", F.explode(F.array(*structs)).alias("bb")).select(
         "id", "bb.band", "bb.bucket"
     )
 
-    # skew-balanced candidate generation: plain (band, bucket) equi-join
-    # until a bucket crosses HOT_BUCKET_ROWS, salted sub-keys beyond (the
-    # boilerplate-flood defense — see _bucket_self_join_pairs)
-    raw_candidates = _bucket_self_join_pairs(
-        banded, ["band", "bucket"], hot_rows=hot_bucket_rows
-    )
-    # estimate prune: matched-component fraction of the two signatures.
-    # The sig_arr sides are id-keyed joins Spark broadcasts when small; at
-    # corpus scale they shuffle on id — the same key the candidates already
-    # carry.  zip_with/aggregate over num_hashes longs per pair, codegen'd.
+
+def _signature_prune(
+    raw: DataFrame,
+    sig_a: DataFrame,
+    sig_b: DataFrame,
+    cols: tuple,
+    num_hashes: int,
+    jaccard_threshold: float,
+    est_margin: float | None,
+) -> DataFrame:
+    """Persisted ``cols`` candidate pairs of ``raw`` whose signatures agree
+    on at least ``jaccard_threshold - est_margin`` of their components.
+
+    Band buckets admit pairs well below the threshold (16 bands x 4 rows
+    has its S-curve midpoint near J~0.5), so the candidate set can be
+    orders of magnitude larger than the true near-dup set (measured 123k
+    candidates -> 256 true pairs on the sf0.1 documents table).  Comparing
+    the two signatures estimates J with std sqrt(J(1-J)/num_hashes) ~0.05,
+    at ~1% of the cost of a shingle-set intersection; the default margin
+    is 4 sigma (~0.2), so a true pair at exactly the threshold escapes
+    with probability ~3e-5 — far below the banding miss rate the scheme
+    already accepts.  ``est_margin=1.0`` disables the prune."""
+    if est_margin is None:
+        est_margin = 4.0 * (
+            (jaccard_threshold * (1.0 - jaccard_threshold) / num_hashes) ** 0.5
+        )
+    ca, cb = cols
+    # zip_with/aggregate over num_hashes longs per pair, codegen'd.  The
+    # signature sides are id-keyed joins Spark broadcasts when small; at
+    # corpus scale they shuffle on id — the key the candidates carry.
     est = (
         F.aggregate(
             F.zip_with(
@@ -273,86 +252,94 @@ def minhash_near_duplicates(
         )
         / F.lit(float(num_hashes))
     )
-    # surviving candidates are persisted: they feed the semi-join that
-    # scopes shingle computation AND both sides of the verify join — tiny
-    # (two longs/pair)
-    candidates = (
-        raw_candidates.join(
-            sig_arr.select(F.col("id").alias("id_a"), F.col("sig").alias("sa")), "id_a"
-        )
-        .join(sig_arr.select(F.col("id").alias("id_b"), F.col("sig").alias("sb")), "id_b")
+    return (
+        raw.join(sig_a.select(F.col("id").alias(ca), F.col("sig").alias("sa")), ca)
+        .join(sig_b.select(F.col("id").alias(cb), F.col("sig").alias("sb")), cb)
         .filter(est >= F.lit(max(jaccard_threshold - est_margin, 0.0)))
-        .select("id_a", "id_b")
+        .select(ca, cb)
         .persist()
     )
-    # The candidate cardinality is MEASURED here (eager for the same
-    # reason), so the verify topology can be chosen exactly (runtime
-    # adaptivity with better information than AQE's byte estimates): a
-    # small candidate set broadcasts — the verify joins collapse into one
-    # shuffle-free stage — while a huge one (mega-bucket corpora) keeps
-    # the scale-safe shuffle equi-join.  A measured-small set is also
-    # lineage-truncated (session.measured): every later action analyzes a
-    # tiny LogicalRDD plan instead of the full banded-signature lineage —
-    # the q33 serial driver share.
+
+
+def _minhash_verify(
+    candidates: DataFrame,
+    df_a: DataFrame,
+    df_b: DataFrame,
+    cols: tuple,
+    text_col: str,
+    id_col: str,
+    k: int,
+    jaccard_threshold: float,
+) -> DataFrame:
+    """Exact shingle-set Jaccard of the persisted ``cols`` candidate pairs
+    (side a's ids from ``df_a``, side b's from ``df_b``); returns the
+    persisted ``cols`` + ``jaccard`` rows at or above the threshold.  A
+    self join (``df_b is df_a``) builds ONE shingle-set frame for both
+    verify sides."""
+    ca, cb = cols
+    # The candidate cardinality is MEASURED here, so the verify topology
+    # is chosen exactly (runtime adaptivity with better information than
+    # AQE's byte estimates): a small candidate set broadcasts — the verify
+    # joins collapse into one shuffle-free stage — while a huge one
+    # (mega-bucket corpora) keeps the scale-safe shuffle equi-join.  A
+    # measured-small set is also lineage-truncated (session.measured):
+    # every later action analyzes a tiny LogicalRDD plan instead of the
+    # full banded-signature lineage — the q33 serial driver share.
     with measured(candidates) as (candidates, n_pairs):
-        cand_join = broadcast_if(candidates, n_pairs)
-        # shingle sets for exact verification — computed ONLY for docs
-        # that appear in a candidate pair (left-semi on the candidate id
-        # set).  At corpus scale the candidate set is orders of magnitude
-        # smaller than the corpus, so the expensive shingle
-        # materialization never touches non-candidate documents.
-        cand_ids = broadcast_if(
-            candidates.select(F.col("id_a").alias("id"))
-            .union(candidates.select(F.col("id_b").alias("id")))
-            .distinct(),
-            n_pairs,
-        )
         # size the verify stage by the MEASURED candidate cardinality, not
         # the corpus: ~512 docs per partition, capped at cluster
         # parallelism.  A corpus-width repartition here would spread a few
         # hundred candidate docs over empty tasks whose scheduling
         # dominates; a huge candidate set still fans out fully.
         verify_part = max(
-            1, min(compute_parallelism(df.sparkSession), (2 * n_pairs) // 512 + 1)
+            1, min(compute_parallelism(df_a.sparkSession), (2 * n_pairs) // 512 + 1)
         )
-        # Shingle sets are HASHED to int64 before the pair joins: Jaccard
-        # over distinct xxhash64 values equals Jaccard over the distinct
-        # shingle strings (a collision within one pair's ~2k-element union
-        # has probability ~k^2/2^65 — immaterial even over millions of
-        # pairs), and long-array intersection is ~8x cheaper than UTF8
-        # string intersection while the join intermediates shrink ~2.5x
-        # (8 bytes vs 5-char strings).
-        sh_df = (
-            df.select(F.col(id_col).alias("id"), normalize_text(F.col(text_col)).alias("t"))
-            .join(cand_ids, on="id", how="left_semi")
-            .repartition(verify_part, F.col("id"))
-            .select(
-                "id",
-                F.transform(
-                    shingles_of_normalized(F.col("t"), k), lambda s: F.xxhash64(s)
-                ).alias("sh"),
+
+        def shingle_sets(df: DataFrame, *id_cols: str) -> DataFrame:
+            # computed ONLY for docs that appear in a candidate pair (left-
+            # semi on the candidate id set), so the expensive shingle
+            # materialization never touches non-candidate documents.  Sets
+            # are HASHED to int64: Jaccard over distinct xxhash64 values
+            # equals Jaccard over the distinct shingle strings (a collision
+            # within one pair's ~2k-element union has probability
+            # ~k^2/2^65), and long-array intersection is ~8x cheaper than
+            # UTF8 string intersection while the join intermediates shrink
+            # ~2.5x.
+            ids = reduce(
+                DataFrame.union, [candidates.select(F.col(c).alias("id")) for c in id_cols]
+            ).distinct()
+            sets = (
+                df.select(F.col(id_col).alias("id"), normalize_text(F.col(text_col)).alias("t"))
+                .join(broadcast_if(ids, n_pairs), on="id", how="left_semi")
+                .repartition(verify_part, F.col("id"))
+                .select(
+                    "id",
+                    F.transform(
+                        shingles_of_normalized(F.col("t"), k), lambda s: F.xxhash64(s)
+                    ).alias("sh"),
+                )
+                .select("id", "sh", F.size("sh").alias("ls"))
+                .persist()
             )
-            .select("id", "sh", F.size("sh").alias("ls"))
-            .persist()
-        )
-        # eager: consumed by both sides of the verify join.  (r11 A/B:
-        # folding this materialization into the verify job measured
-        # control-corrected NEUTRAL warm — 2.75 s eager vs 2.67 s folded
-        # with a 1.2x-drifting control — and risks concurrent-stage cache
-        # materialization stalls, so the eager count stays.)
-        sh_df.count()
+            # eager: consumed by both sides of the verify join.  (r11 A/B:
+            # folding this materialization into the verify job measured
+            # NEUTRAL warm and risks concurrent-stage cache stalls.)
+            sets.count()
+            return sets
+
+        if df_b is df_a:
+            sh_a = sh_b = shingle_sets(df_a, ca, cb)
+        else:
+            sh_a, sh_b = shingle_sets(df_a, ca), shingle_sets(df_b, cb)
         pairs = (
-            cand_join.join(
-                sh_df.select(
-                    F.col("id").alias("id_a"), F.col("sh").alias("sh_a"), F.col("ls").alias("la")
-                ),
-                "id_a",
+            broadcast_if(candidates, n_pairs)
+            .join(
+                sh_a.select(F.col("id").alias(ca), F.col("sh").alias("sh_a"), F.col("ls").alias("la")),
+                ca,
             )
             .join(
-                sh_df.select(
-                    F.col("id").alias("id_b"), F.col("sh").alias("sh_b"), F.col("ls").alias("lb")
-                ),
-                "id_b",
+                sh_b.select(F.col("id").alias(cb), F.col("sh").alias("sh_b"), F.col("ls").alias("lb")),
+                cb,
             )
             # threshold length prune before any intersection work: J >= t
             # forces min(|a|,|b|) >= t * max(|a|,|b|) (|a∩b| <= min,
@@ -373,31 +360,58 @@ def minhash_near_duplicates(
         result = (
             pairs.withColumn("jaccard", jac)
             .filter(F.col("jaccard") >= jaccard_threshold)
-            .select("id_a", "id_b", "jaccard")
+            .select(ca, cb, "jaccard")
             .persist()
         )
         result.count()
-    for c in (sig_arr, sh_df):
-        c.unpersist()
+    sh_a.unpersist()
+    sh_b.unpersist()
     return result
 
 
-def minhash_sig_array(
+def minhash_near_duplicates(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     num_hashes: int = 64,
+    bands: int = 16,
     k: int = 5,
+    jaccard_threshold: float = 0.8,
+    est_margin: float | None = None,
 ) -> DataFrame:
-    """(id, sig array<bigint>) — the materializable signature-store form of
-    :func:`minhash_signatures`.  Persist this as parquet once per ingested
-    corpus (num_hashes longs/doc) and hand it to
-    :func:`minhash_near_duplicates_against`; the corpus TEXT is then only
-    touched to verify the (tiny) candidate set."""
-    sig = minhash_signatures(df, text_col, id_col, num_hashes, k)
-    return sig.select(
-        "id", F.array(*[F.col(f"m{j}") for j in range(num_hashes)]).alias("sig")
+    """Near-duplicate pairs (id_a < id_b, jaccard >= threshold).
+
+    Pipeline: signatures -> band bucket ids -> bucket equi-join (candidate
+    generation is a shuffle on (band, bucket) keys only) -> signature-
+    estimate prune (:func:`_signature_prune`; the stage that makes
+    boilerplate-heavy corpora tractable) -> exact Jaccard verification,
+    joining the surviving candidates (small) back to the shingle sets by
+    id.  Returns (id_a, id_b, jaccard).  The prune is probabilistic in the
+    same sense LSH banding already is; pass ``est_margin=1.0`` to disable
+    it.
+
+    The returned DataFrame is persisted (eagerly materialized, tiny); the
+    heavyweight intermediates are unpersisted before returning.  Callers
+    holding the result long-term may ``.unpersist()`` it when done.
+    """
+    # persist the signature ARRAY once: it feeds band-bucket generation
+    # (both sides of the self-join) and the estimate prune.  num_hashes
+    # longs per doc — tiny.  It must be materialized EAGERLY before any
+    # job consumes it twice (racing lazy materialization from multiple
+    # consumers causes double-compute / cache-lock stalls) — but the
+    # hot-bucket existence probe inside _hot_key_join is itself a full
+    # pass over the banded signatures, so THAT job doubles as the
+    # materialization and a separate count() would be a whole extra job
+    # of driver work (measured 0.3-0.4 s of q33's wall at sf0.1).
+    sig_arr = minhash_sig_array(df, text_col, id_col, num_hashes, k).persist()
+    raw = _bucket_self_join_pairs(_band_keys(sig_arr, bands, num_hashes), ["band", "bucket"])
+    cols = ("id_a", "id_b")
+    candidates = _signature_prune(
+        raw, sig_arr, sig_arr, cols, num_hashes, jaccard_threshold, est_margin
     )
+    result = _minhash_verify(candidates, df, df, cols, text_col, id_col, k, jaccard_threshold)
+    sig_arr.unpersist()
+    return result
 
 
 def minhash_near_duplicates_against(
@@ -411,7 +425,6 @@ def minhash_near_duplicates_against(
     jaccard_threshold: float = 0.8,
     corpus_sig: DataFrame | None = None,
     est_margin: float | None = None,
-    hot_bucket_rows: int = HOT_BUCKET_ROWS,
 ) -> DataFrame:
     """Near-duplicate pairs between an INCOMING batch and an already-
     ingested corpus — the per-crawl/per-snapshot shape production dedup
@@ -427,11 +440,6 @@ def minhash_near_duplicates_against(
     estimate prune (4-sigma margin) → exact Jaccard verify on shingle
     sets, semi-join-scoped to candidates on BOTH sides.
     """
-    rows_per_band = num_hashes // bands
-    if est_margin is None:
-        est_margin = 4.0 * (
-            (jaccard_threshold * (1.0 - jaccard_threshold) / num_hashes) ** 0.5
-        )
     new_sig = minhash_sig_array(new_df, text_col, id_col, num_hashes, k).persist()
     new_sig.count()
     # Only persist/unpersist signature stores WE derived: a caller-supplied
@@ -440,180 +448,31 @@ def minhash_near_duplicates_against(
     # would silently force recomputation on the next batch.
     corpus_sig_is_internal = corpus_sig is None
     if corpus_sig_is_internal:
-        corpus_sig = minhash_sig_array(corpus_df, text_col, id_col, num_hashes, k)
-        # persisted but not eagerly counted: the bsizes hot-bucket
-        # existence check below is a full pass over the corpus band keys
-        # and doubles as the materialization (the q33 discipline)
-        corpus_sig = corpus_sig.persist()
-
-    def banded(sig_arr: DataFrame) -> DataFrame:
-        structs = [
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(
-                    *[
-                        F.element_at("sig", b * rows_per_band + j + 1)
-                        for j in range(rows_per_band)
-                    ]
-                ).alias("bucket"),
-            )
-            for b in range(bands)
-        ]
-        return sig_arr.select("id", F.explode(F.array(*structs)).alias("bb")).select(
-            "id", "bb.band", "bb.bucket"
+        # persisted but not eagerly counted: the hot-bucket existence
+        # check is a full pass over the corpus band keys and doubles as
+        # the materialization (the q33 discipline)
+        corpus_sig = minhash_sig_array(corpus_df, text_col, id_col, num_hashes, k).persist()
+    # hotness comes from a map-side-combined count over the corpus band
+    # keys — the side whose membership drives the (new x corpus) blowup
+    cb = _band_keys(corpus_sig, bands, num_hashes)
+    sizes = cb.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("__n"))
+    raw = (
+        _hot_key_join(
+            _band_keys(new_sig, bands, num_hashes), cb, ["band", "bucket"], "id", sizes
         )
-
-    # skew-balanced batch-vs-corpus candidate join (the asymmetric twin
-    # of _bucket_self_join_pairs' conditional salting, r9 verdict #5): a
-    # corpus bucket holding >= HOT_BUCKET_ROWS docs — the boilerplate
-    # flood — would put every (new-doc x corpus-doc) match for that key
-    # in one task, so hot buckets split into N_BUCKET_SALTS sub-keys
-    # (new-side salt derived from the new id, corpus side replicated);
-    # cold buckets ride salt 0 on both sides, preserving the plain
-    # equi-join.  Hotness comes from a map-side-combined count over the
-    # corpus band keys — the side whose membership drives the blowup.
-    cb = banded(corpus_sig)
-    bsizes = cb.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("__n"))
-    bhot = F.col("__n") >= F.lit(hot_bucket_rows)
-    # bounded existence check first (the _bucket_self_join_pairs
-    # two-tier discipline): no hot corpus bucket — every real corpus —
-    # keeps the exact plain equi-join; bsizes aggregates off the cached
-    # signature store, so the check is one small job
-    if bsizes.filter(bhot).limit(1).count() == 0:
-        n, c = banded(new_sig).alias("n"), cb.alias("c")
-        raw = (
-            n.join(
-                c,
-                (F.col("n.band") == F.col("c.band"))
-                & (F.col("n.bucket") == F.col("c.bucket")),
-            )
-            .select(F.col("n.id").alias("new_id"), F.col("c.id").alias("corpus_id"))
-            .dropDuplicates(["new_id", "corpus_id"])
-        )
-    else:
-        nb = (
-            banded(new_sig)
-            .join(bsizes, ["band", "bucket"])  # inner: keys absent from the
-            # corpus have no match anyway, so dropping them is a free prune
-            .withColumn(
-                "__salt",
-                F.when(
-                    bhot,
-                    F.pmod(F.xxhash64(F.col("id"), F.lit(0x5317)), F.lit(N_BUCKET_SALTS)),
-                ).otherwise(F.lit(0).cast("bigint")),
-            )
-            .alias("n")
-        )
-        cbs = (
-            cb.join(bsizes, ["band", "bucket"])
-            .withColumn(
-                "__salt",
-                F.explode(
-                    F.when(
-                        bhot,
-                        F.sequence(
-                            F.lit(0).cast("bigint"),
-                            F.lit(N_BUCKET_SALTS - 1).cast("bigint"),
-                        ),
-                    ).otherwise(F.array(F.lit(0).cast("bigint")))
-                ),
-            )
-            .alias("c")
-        )
-        raw = (
-            nb.join(
-                cbs,
-                (F.col("n.band") == F.col("c.band"))
-                & (F.col("n.bucket") == F.col("c.bucket"))
-                & (F.col("n.__salt") == F.col("c.__salt")),
-            )
-            .select(F.col("n.id").alias("new_id"), F.col("c.id").alias("corpus_id"))
-            .dropDuplicates(["new_id", "corpus_id"])
-        )
-    est = (
-        F.aggregate(
-            F.zip_with(
-                F.col("sa"), F.col("sb"), lambda x, y: F.when(x == y, 1).otherwise(0)
-            ),
-            F.lit(0),
-            lambda acc, x: acc + x,
-        )
-        / F.lit(float(num_hashes))
+        .select(F.col("a.id").alias("new_id"), F.col("b.id").alias("corpus_id"))
+        .dropDuplicates(["new_id", "corpus_id"])
     )
-    candidates = (
-        raw.join(new_sig.select(F.col("id").alias("new_id"), F.col("sig").alias("sa")), "new_id")
-        .join(
-            corpus_sig.select(F.col("id").alias("corpus_id"), F.col("sig").alias("sb")),
-            "corpus_id",
-        )
-        .filter(est >= F.lit(max(jaccard_threshold - est_margin, 0.0)))
-        .select("new_id", "corpus_id")
-        .persist()
+    cols = ("new_id", "corpus_id")
+    candidates = _signature_prune(
+        raw, new_sig, corpus_sig, cols, num_hashes, jaccard_threshold, est_margin
     )
-    # measured, and lineage-truncated when small (the
-    # minhash_near_duplicates discipline — see session.measured)
-    with measured(candidates) as (candidates, n_pairs):
-        new_ids = candidates.select(F.col("new_id").alias("id")).distinct()
-        cor_ids = candidates.select(F.col("corpus_id").alias("id")).distinct()
-        cand_join = broadcast_if(candidates, n_pairs)
-        verify_part = max(
-            1, min(compute_parallelism(new_df.sparkSession), (2 * n_pairs) // 512 + 1)
-        )
-
-        def shingle_sets(df: DataFrame, ids: DataFrame) -> DataFrame:
-            return (
-                df.select(F.col(id_col).alias("id"), normalize_text(F.col(text_col)).alias("t"))
-                .join(broadcast_if(ids, n_pairs), on="id", how="left_semi")
-                .repartition(verify_part, F.col("id"))
-                .select(
-                    "id",
-                    F.transform(
-                        shingles_of_normalized(F.col("t"), k), lambda s: F.xxhash64(s)
-                    ).alias("sh"),
-                )
-                .select("id", "sh", F.size("sh").alias("ls"))
-                .persist()
-            )
-
-        sh_new = shingle_sets(new_df, new_ids)
-        sh_cor = shingle_sets(corpus_df, cor_ids)
-        sh_new.count()
-        sh_cor.count()
-        pairs = (
-            cand_join.join(
-                sh_new.select(
-                    F.col("id").alias("new_id"), F.col("sh").alias("sh_a"), F.col("ls").alias("la")
-                ),
-                "new_id",
-            )
-            .join(
-                sh_cor.select(
-                    F.col("id").alias("corpus_id"),
-                    F.col("sh").alias("sh_b"),
-                    F.col("ls").alias("lb"),
-                ),
-                "corpus_id",
-            )
-            .filter(
-                (F.col("la") >= F.lit(jaccard_threshold) * F.col("lb"))
-                & (F.col("lb") >= F.lit(jaccard_threshold) * F.col("la"))
-            )
-        )
-        inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-        union = F.size(F.array_union(F.col("sh_a"), F.col("sh_b")))
-        jac = F.round(inter / F.greatest(union, F.lit(1)), 6)
-        result = (
-            pairs.withColumn("jaccard", jac)
-            .filter(F.col("jaccard") >= jaccard_threshold)
-            .select("new_id", "corpus_id", "jaccard")
-            .persist()
-        )
-        result.count()
-    internal_caches = [new_sig, sh_new, sh_cor]
+    result = _minhash_verify(
+        candidates, new_df, corpus_df, cols, text_col, id_col, k, jaccard_threshold
+    )
+    new_sig.unpersist()
     if corpus_sig_is_internal:
-        internal_caches.append(corpus_sig)
-    for cch in internal_caches:
-        cch.unpersist()
+        corpus_sig.unpersist()
     return result
 
 
@@ -834,7 +693,6 @@ def simhash_near_duplicates(
     max_hamming: int = 3,
     blocks: int = 4,
     token_hash=None,
-    hot_bucket_rows: int = HOT_BUCKET_ROWS,
 ) -> DataFrame:
     """Pairs within ``max_hamming`` bit distance, via the pigeonhole trick:
     split the 64-bit key into ``blocks`` chunks — any pair within distance
@@ -865,9 +723,7 @@ def simhash_near_duplicates(
     # persist: the simhash aggregation above otherwise recomputes for the
     # bucket-size pass and both self-join sides inside the helper
     chunks = chunks.persist()
-    cand = _bucket_self_join_pairs(
-        chunks, ["blk", "chunk"], carry_cols=("simhash",), hot_rows=hot_bucket_rows
-    )
+    cand = _bucket_self_join_pairs(chunks, ["blk", "chunk"], carry_cols=("simhash",))
     hamming = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     result = (
         cand.withColumn("hamming", hamming)
@@ -965,7 +821,6 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     n: int = 2,
     jaccard_threshold: float = 0.4,
-    hot_bucket_rows: int = HOT_BUCKET_ROWS,
 ) -> DataFrame:
     """EXACT word-n-gram Jaccard near-duplicate pairs via prefix-filtered
     set-similarity self-join (the PPJoin family's blocking, public
@@ -1068,13 +923,12 @@ def ngram_jaccard_pairs(
         # boilerplate gram shared by m docs would otherwise put all
         # m^2/2 of its co-occurrences in one task)
         _bucket_self_join_pairs(
-            ranked, ["gram"], carry_cols=("ls",), hot_rows=hot_bucket_rows,
-            distinct=False,
+            ranked, ["gram"], carry_cols=("ls",), distinct=False,
             # conservative pre-check off the CACHED cells' df table:
             # prefix counts <= df, so no df-hot gram => no hot prefix
             # gram — and the ranked window subtree is never re-run for
             # a bucket-size count
-            hot_precheck=freq.filter(F.col("df_") >= F.lit(hot_bucket_rows)),
+            precheck=freq.filter(F.col("df_") >= F.lit(HOT_BUCKET_ROWS)),
         )
         # length filter: J >= t forces t*la <= lb <= la/t
         .filter(
@@ -1105,7 +959,6 @@ def shingle_containment_pairs(
     id_col: str = "doc_id",
     k: int = 5,
     containment_threshold: float = 0.8,
-    hot_bucket_rows: int = HOT_BUCKET_ROWS,
 ) -> DataFrame:
     """ASYMMETRIC near-dup: quote/contamination detection.  Returns ordered
     pairs (id_a, id_b, containment) where containment = |A∩B| / |A| >=
@@ -1198,74 +1051,29 @@ def shingle_containment_pairs(
             "gram",
         )
     )
-    # conditional salting of the probe join (r9 verdict #5): hotness is
-    # measured on the PROBE side — |a(g)| is the binding factor of the
-    # join's per-gram output |a(g)| x |b(g)|, and the probe is rarest-
-    # first, so a hot probe gram only arises from a genuine flood
-    # (thousands of near-identical docs whose "rare" grams coincide).
-    # The first cut keyed hotness on corpus doc-frequency instead, and
-    # the r10 sf0.3 scaling notch caught it at alpha 2.66: ubiquitous
-    # grams (df >= 4096 but almost never in any probe) were exploded
-    # x16 on the b side for zero matching work — 18.5x shuffle bytes on
-    # 3x data.  Gate order keeps the common corpus cheap: a probe gram
-    # can only be hot if its corpus df is hot (probe count <= df), and
-    # ``freq`` is a plain count over the CACHED cells — so one bounded
-    # limit(1) job decides the cold path (measured ~0.2 s) without ever
-    # analyzing the window subtree twice; only a df-hot corpus pays the
-    # probe-frequency aggregation (persisting the probe first).  The
-    # hot list is bounded at HOT_BUCKET_TOP_K (overflow grams degrade
-    # to the plain join); when it is empty the join below is EXACTLY
-    # the pre-salting plan.
-    hot_grams = []
-    if freq.filter(F.col("df_") >= F.lit(hot_bucket_rows)).limit(1).count() > 0:
-        a_probe = a_probe.persist()
-        hot_grams = [
-            r["gram"]
-            for r in a_probe.groupBy("gram")
-            .agg(F.count(F.lit(1)).alias("pn"))
-            .filter(F.col("pn") >= F.lit(hot_bucket_rows))
-            .orderBy(F.desc("pn"), "gram")
-            .limit(HOT_BUCKET_TOP_K)
-            .collect()
-        ]
     b_index = cells.join(sizes, "id").select(
         F.col("id").alias("id_b"), F.col("ls").alias("lb"), "gram"
     )
-    if not hot_grams:
-        joined = a_probe.join(b_index, "gram")
-    else:
-        marker = F.broadcast(
-            df.sparkSession.createDataFrame(
-                [(g,) for g in hot_grams], "gram bigint"
-            ).withColumn("__hot", F.lit(1))
-        )
-        ghot = F.col("__hot").isNotNull()
-        ap = a_probe.join(marker, "gram", "left").select(
-            "id_a",
-            "la",
-            "pl",
-            "gram",
-            F.when(
-                ghot,
-                F.pmod(F.xxhash64(F.col("id_a"), F.lit(0x5317)), F.lit(N_BUCKET_SALTS)),
-            )
-            .otherwise(F.lit(0).cast("bigint"))
-            .alias("__salt"),
-        )
-        bi = b_index.join(marker, "gram", "left").select(
-            "id_b",
-            "lb",
-            "gram",
-            F.explode(
-                F.when(
-                    ghot,
-                    F.sequence(
-                        F.lit(0).cast("bigint"), F.lit(N_BUCKET_SALTS - 1).cast("bigint")
-                    ),
-                ).otherwise(F.array(F.lit(0).cast("bigint")))
-            ).alias("__salt"),
-        )
-        joined = ap.join(bi, ["gram", "__salt"])
+    # conditional salting of the probe join: hotness is measured on the
+    # PROBE side — |a(g)| is the binding factor of the join's per-gram
+    # output |a(g)| x |b(g)|, and the probe is rarest-first, so a hot
+    # probe gram only arises from a genuine flood (thousands of near-
+    # identical docs whose "rare" grams coincide).  Keying hotness on
+    # corpus doc-frequency instead was caught by the r10 sf0.3 scaling
+    # notch at alpha 2.66: ubiquitous grams (df >= 4096 but almost never in
+    # any probe) were exploded x16 on the b side for zero matching work.
+    # The precheck keeps the common corpus cheap: a probe gram can only be
+    # hot if its corpus df is hot (probe count <= df), and ``freq`` is a
+    # plain count over the CACHED cells — one bounded job decides the cold
+    # path without analyzing the window subtree twice.
+    joined = _hot_key_join(
+        a_probe,
+        b_index,
+        ["gram"],
+        "id_a",
+        sizes=a_probe.groupBy("gram").agg(F.count(F.lit(1)).alias("__n")),
+        precheck=freq.filter(F.col("df_") >= F.lit(HOT_BUCKET_ROWS)),
+    )
     # exact hit-count bound: hits within the probe >= ceil(t*la) - (la - pl)
     # (-1 slack absorbs float-ceil boundary ulps; weakens, never breaks)
     required = F.ceil(F.lit(t) * F.col("la")) - (F.col("la") - F.col("pl")) - 1
@@ -1278,9 +1086,7 @@ def shingle_containment_pairs(
         .persist()
     )
     cont = F.round(F.col("inter") / F.greatest(F.col("la"), F.lit(1)), 6)
-    out = _verify_pairs(cells, candidates, cont, "containment", t)
-    a_probe.unpersist()
-    return out
+    return _verify_pairs(cells, candidates, cont, "containment", t)
 
 
 def duplication_weighted_keep(

@@ -266,22 +266,6 @@ def channel_stats(media_df: DataFrame) -> DataFrame:
     )
 
 
-def resize_stub(media_df: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize plumbing for payloads with NO real codec (fake media):
-    passes bytes through a mapInPandas stage and rewrites the metadata.
-    For BMP/PPM payloads use :func:`resize_image` — the REAL
-    nearest-neighbor resampler."""
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf.copy()
-            out["width"] = width
-            out["height"] = height
-            yield out
-
-    return media_df.mapInPandas(_resize, MEDIA_SCHEMA)
-
-
 def resize_pixels(px: np.ndarray, width: int, height: int) -> np.ndarray:
     """REAL nearest-neighbor resample: (h, w, 3) -> (height, width, 3).
 
@@ -451,40 +435,6 @@ def frame_sample(media_df: DataFrame, every_n: int = 2) -> DataFrame:
         "doc_id bigint, frame_no int, "
         "mean_r_micro bigint, mean_g_micro bigint, mean_b_micro bigint",
     )
-
-
-def frame_sample_stub(media_df: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling plumbing for payloads with NO container
-    format (fake media): emits one row per sampled 'frame' (chunks of
-    the payload), exploding rows batch-wise.  For MVID payloads use
-    :func:`frame_sample` — the REAL index-seeking sampler."""
-
-    def _frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = pdf["payload"].map(bytes).to_numpy()
-            lengths = np.fromiter((len(p) for p in payloads), dtype="int64", count=len(payloads))
-            chunk = np.maximum(lengths // every_n, 1)
-            n_frames = np.minimum(every_n, lengths)
-            # vectorized explode: repeat row attrs per frame, slice by offsets
-            doc_ids = np.repeat(pdf["doc_id"].to_numpy(), n_frames)
-            frame_no = (
-                np.concatenate([np.arange(n, dtype="int32") for n in n_frames])
-                if len(n_frames) and n_frames.sum() > 0
-                else np.array([], dtype="int32")
-            )
-            starts = np.repeat(chunk, n_frames) * frame_no
-            ends = starts + np.repeat(chunk, n_frames)
-            frames = [
-                p[s:e]
-                for p, s, e in zip(np.repeat(payloads, n_frames), starts, ends)
-            ]
-            yield pd.DataFrame(
-                {"doc_id": doc_ids, "frame_no": frame_no, "frame": frames}
-            )
-
-    return media_df.mapInPandas(_frames, "doc_id bigint, frame_no int, frame binary")
 
 
 # ---------------------------------------------------------------------------

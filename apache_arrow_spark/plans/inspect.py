@@ -103,6 +103,22 @@ def shuffle_bytes_written(df: DataFrame) -> int:
     return sum(v for _, name, v in executed_metrics(df) if name == "shuffleBytesWritten")
 
 
+def _stage_list(spark) -> list:
+    """Every stage (``v1.StageData``) the app status store still holds."""
+    sc = spark.sparkContext
+    jvm = sc._jvm
+    # full Spark-4 signature: (statuses, details, withSummaries, quantiles,
+    # taskStatus) — empty filters mean "all stages"
+    seq = sc._jsc.sc().statusStore().stageList(
+        jvm.java.util.ArrayList(),
+        False,
+        False,
+        sc._gateway.new_array(jvm.double, 0),
+        jvm.java.util.ArrayList(),
+    )
+    return [seq.apply(i) for i in range(seq.size())]
+
+
 def app_shuffle_bytes(spark, since_stage: int | None = None) -> int:
     """Sum of shuffle bytes written across completed stages in the app
     status store.  Unlike :func:`shuffle_bytes_written` this catches work
@@ -123,21 +139,9 @@ def app_shuffle_bytes(spark, since_stage: int | None = None) -> int:
     which counts only stages the run itself created — eviction of OLD
     stages can no longer corrupt it (new stages are never evicted while
     the measurement is in flight at these scales)."""
-    sc = spark.sparkContext
-    store = sc._jsc.sc().statusStore()
-    jvm = sc._jvm
-    # full Spark-4 signature: (statuses, details, withSummaries, quantiles,
-    # taskStatus) — empty filters mean "all stages"
-    seq = store.stageList(
-        jvm.java.util.ArrayList(),
-        False,
-        False,
-        sc._gateway.new_array(jvm.double, 0),
-        jvm.java.util.ArrayList(),
-    )
     return sum(
         s.shuffleWriteBytes()
-        for s in (seq.apply(i) for i in range(seq.size()))
+        for s in _stage_list(spark)
         if since_stage is None or s.stageId() > since_stage
     )
 
@@ -145,15 +149,4 @@ def app_shuffle_bytes(spark, since_stage: int | None = None) -> int:
 def latest_stage_id(spark) -> int:
     """Highest stage id currently in the status store (-1 when empty) —
     the watermark for :func:`app_shuffle_bytes`'s ``since_stage``."""
-    sc = spark.sparkContext
-    store = sc._jsc.sc().statusStore()
-    jvm = sc._jvm
-    seq = store.stageList(
-        jvm.java.util.ArrayList(),
-        False,
-        False,
-        sc._gateway.new_array(jvm.double, 0),
-        jvm.java.util.ArrayList(),
-    )
-    ids = [seq.apply(i).stageId() for i in range(seq.size())]
-    return max(ids) if ids else -1
+    return max((s.stageId() for s in _stage_list(spark)), default=-1)

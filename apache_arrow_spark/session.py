@@ -73,9 +73,9 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     for k, v in _RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
+        except Exception as e:
             # Non-runtime-settable in this build — session default applies.
-            pass
+            warn_once("runtime_conf", "cannot set %s (%s); the session's value applies", k, e)
     _ship_package(spark)
     return spark
 
@@ -107,8 +107,9 @@ def _ship_package(spark: SparkSession) -> None:
                         zf.write(full, rel)
     try:
         spark.sparkContext.addPyFile(zip_path)
-    except Exception:
-        pass  # e.g. spark-connect sessions; local imports still work there
+    except Exception as e:
+        # e.g. spark-connect sessions; local imports still work there
+        warn_once("ship_package", "could not ship the package to executors (%s)", e)
     spark._aas_shipped = True
 
 

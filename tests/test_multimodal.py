@@ -8,8 +8,6 @@ from apache_arrow_spark.functions.multimodal import (
     attach_fake_media,
     decode_image,
     extract_features,
-    frame_sample_stub,
-    resize_stub,
 )
 
 
@@ -43,20 +41,6 @@ def test_extract_features_batchwise(spark, media):
         assert len(r["features"]) == 16
         assert abs(sum(r["features"]) - 1.0) < 1e-6
         assert r["n_bytes"] > 0
-
-
-def test_resize_rewrites_metadata(spark, media):
-    out = resize_stub(media, 224, 224)
-    r = out.first()
-    assert (r["width"], r["height"]) == (224, 224)
-    assert out.count() == 50
-
-
-def test_frame_sample_explodes(spark, media):
-    frames = frame_sample_stub(media.limit(3), every_n=4)
-    rows = frames.collect()
-    assert len(rows) == 12
-    assert {r["frame_no"] for r in rows} == {0, 1, 2, 3}
 
 
 # ---------------------------------------------------------------------------

@@ -4,6 +4,7 @@ prune, dims broadcast, codegen covers the hot path, no driver collects in
 data paths."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from apache_arrow_spark.plans.inspect import (
     codegen_stages,
@@ -961,6 +962,39 @@ def test_spread_compute_unevaluable_guard_is_identity_and_warns(monkeypatch, cap
         assert spread_compute(df, "k") is df
     warns = [r for r in caplog.records if r.name == "apache_arrow_spark"]
     assert len(warns) == 1 and "spread_compute" in warns[0].getMessage()
+
+
+def _raise(*_args):
+    raise RuntimeError("not supported by this session")
+
+
+@pytest.mark.parametrize(
+    "failing, message",
+    [("conf", "cannot set"), ("ship", "could not ship")],
+)
+def test_session_fallback_keeps_session_and_warns_once(monkeypatch, caplog, failing, message):
+    """A runtime conf the session refuses, or a failed ``addPyFile``,
+    leaves the session usable and logs one WARN per process."""
+    import logging
+    import types
+
+    import apache_arrow_spark.log as log_mod
+    from apache_arrow_spark.session import apply_runtime_confs
+
+    def stub():
+        return types.SimpleNamespace(
+            conf=types.SimpleNamespace(set=_raise if failing == "conf" else lambda k, v: None),
+            sparkContext=types.SimpleNamespace(addPyFile=_raise),
+            _aas_shipped=failing == "conf",
+        )
+
+    monkeypatch.setattr(log_mod, "_warned", set())
+    stubs = [stub(), stub()]
+    with caplog.at_level(logging.WARNING, logger="apache_arrow_spark"):
+        for s in stubs:
+            assert apply_runtime_confs(s) is s
+    warns = [r for r in caplog.records if r.name == "apache_arrow_spark"]
+    assert len(warns) == 1 and message in warns[0].getMessage()
 
 
 def test_private_observation_handle_only_in_session():

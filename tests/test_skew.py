@@ -88,16 +88,15 @@ def test_salted_join_rejects_unsupported_how(spark):
 
 
 # ---------------------------------------------------------------------------
-# Hot-bucket salting in the similarity joins (r9 verdict #5): a flood of
-# near-identical docs lands every one of them in the same LSH band bucket /
-# simhash chunk / prefix gram, so the candidate self-join would emit the
-# whole m^2/2 pair flood from ONE task.  _bucket_self_join_pairs salts
-# buckets past hot_bucket_rows into N_BUCKET_SALTS sub-keys.  These tests
-# pin (a) exactness — salted and plain paths produce identical pairs on a
-# corpus where the flood IS hot — and (b) engagement — with salting the
-# candidate-join stage's output spreads over (keys x salts) sub-keys, so
-# no near-empty tasks, measured from the status store's per-task shuffle
-# write records.
+# Hot-bucket salting in the similarity joins: a flood of near-identical docs
+# lands every one of them in the same LSH band bucket / simhash chunk /
+# prefix gram, so the candidate join would emit the whole m^2/2 pair flood
+# from ONE task.  dedup._hot_key_join salts keys past HOT_BUCKET_ROWS into
+# N_BUCKET_SALTS sub-keys.  These tests pin (a) exactness — salted and
+# plain paths produce identical pairs on a corpus where the flood IS hot
+# (HOT_BUCKET_ROWS monkeypatched to 64 for the salted run, 1 << 30 for the
+# plain one) — and (b) engagement — the join plan carries the salt sub-key
+# and the worst (key, salt) sub-key emits a fraction of the flood.
 # ---------------------------------------------------------------------------
 
 
@@ -118,99 +117,135 @@ def _pairs(df, cols=("id_a", "id_b")):
     return sorted((r[cols[0]], r[cols[1]]) for r in df.select(*cols).collect())
 
 
-def test_minhash_salted_matches_plain_on_flood(spark):
+def _salted_and_plain(monkeypatch, op, *args, **kw):
+    """``op`` run once with a 64-row hot threshold, once with none hot."""
+    from apache_arrow_spark.functions import dedup
+
+    monkeypatch.setattr(dedup, "HOT_BUCKET_ROWS", 64)
+    salted = op(*args, **kw)
+    monkeypatch.setattr(dedup, "HOT_BUCKET_ROWS", 1 << 30)
+    plain = op(*args, **kw)
+    return salted, plain
+
+
+def test_minhash_salted_matches_plain_on_flood(spark, monkeypatch):
     from apache_arrow_spark.functions.dedup import minhash_near_duplicates
 
     docs = _flood_docs(spark)
-    salted = minhash_near_duplicates(docs, jaccard_threshold=0.5, hot_bucket_rows=64)
-    plain = minhash_near_duplicates(docs, jaccard_threshold=0.5, hot_bucket_rows=1 << 30)
+    salted, plain = _salted_and_plain(
+        monkeypatch, minhash_near_duplicates, docs, jaccard_threshold=0.5
+    )
     assert _pairs(salted) == _pairs(plain)
     assert len(_pairs(salted)) >= 220 * 219 // 4, "flood pairs missing"
     salted.unpersist(), plain.unpersist()
 
 
-def test_simhash_salted_matches_plain_on_flood(spark):
+def test_simhash_salted_matches_plain_on_flood(spark, monkeypatch):
     from apache_arrow_spark.functions.dedup import simhash_near_duplicates
 
     docs = _flood_docs(spark, n_flood=150, n_noise=100)
-    salted = simhash_near_duplicates(docs, max_hamming=3, hot_bucket_rows=64)
-    plain = simhash_near_duplicates(docs, max_hamming=3, hot_bucket_rows=1 << 30)
+    salted, plain = _salted_and_plain(
+        monkeypatch, simhash_near_duplicates, docs, max_hamming=3
+    )
     assert _pairs(salted) == _pairs(plain)
     salted.unpersist(), plain.unpersist()
 
 
-def test_ngram_jaccard_salted_matches_plain_on_flood(spark):
+def test_ngram_jaccard_salted_matches_plain_on_flood(spark, monkeypatch):
     from apache_arrow_spark.functions.dedup import ngram_jaccard_pairs
 
     docs = _flood_docs(spark, n_flood=120, n_noise=80)
-    salted = ngram_jaccard_pairs(docs, n=3, jaccard_threshold=0.4, hot_bucket_rows=64)
-    plain = ngram_jaccard_pairs(
-        docs, n=3, jaccard_threshold=0.4, hot_bucket_rows=1 << 30
+    salted, plain = _salted_and_plain(
+        monkeypatch, ngram_jaccard_pairs, docs, n=3, jaccard_threshold=0.4
     )
     assert _pairs(salted) == _pairs(plain)
     salted.unpersist(), plain.unpersist()
 
 
-def test_containment_salted_matches_plain_on_flood(spark):
+def test_containment_salted_matches_plain_on_flood(spark, monkeypatch):
     from apache_arrow_spark.functions.dedup import shingle_containment_pairs
 
     docs = _flood_docs(spark, n_flood=120, n_noise=80)
-    salted = shingle_containment_pairs(
-        docs, containment_threshold=0.9, hot_bucket_rows=64
-    )
-    plain = shingle_containment_pairs(
-        docs, containment_threshold=0.9, hot_bucket_rows=1 << 30
+    salted, plain = _salted_and_plain(
+        monkeypatch, shingle_containment_pairs, docs, containment_threshold=0.9
     )
     assert _pairs(salted) == _pairs(plain)
     salted.unpersist(), plain.unpersist()
 
 
-def test_salting_engages_and_balances_candidate_stage(spark):
-    """Engagement evidence (r9 verdict #5), deterministic and
-    timing-free.  (1) Wiring: the helper's physical plan joins on the
-    ``__salt`` sub-key (a missing salt in the condition would either
-    duplicate rows — caught by the distinct=False exactness test above —
-    or show here).  (2) Balance: every (key, salt) sub-key lands wholly
-    in one join task, so the per-sub-key emission count a.count x
-    b.count bounds any task's share of the pair flood; on an identical-
-    text flood the hot path's worst sub-key must emit at least 8x fewer
-    rows than the unsalted worst key (16 salts; 8x leaves room for salt-
-    hash imbalance).  Exactness of the same path is pinned by the four
-    *_matches_plain_on_flood tests."""
-    import pyspark.sql.functions as F
+def _assert_salted_and_balanced(a, b, n_hot_b, expected, self_join):
+    """Run dedup._hot_key_join on key ``k`` (hot key 7) with b-side sizes
+    and a 64-row hot threshold; pin the salt wiring, the exact pair count
+    and the per-sub-key emission bound."""
+    from apache_arrow_spark.functions import dedup
 
-    from apache_arrow_spark.functions.dedup import (
-        N_BUCKET_SALTS,
-        _bucket_self_join_pairs,
-    )
-
-    # one hot bucket (160 ids) + a few cold ones
-    rows = [(i, 7) for i in range(160)] + [(1000 + i, i % 4 + 100) for i in range(40)]
-    bucketed = spark.createDataFrame(rows, "id long, k long")
-
-    out = _bucket_self_join_pairs(bucketed, ["k"], hot_rows=64)
+    sizes = b.groupBy("k").agg(F.count(F.lit(1)).alias("__n"))
+    out = dedup._hot_key_join(a, b, ["k"], "id", sizes)
+    if self_join:
+        out = out.filter(F.col("a.id") < F.col("b.id"))
+    out = out.select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "__salt" in plan, "salt sub-key missing from the join plan"
-    assert out.count() == 160 * 159 // 2 + 4 * (10 * 9 // 2)
+    assert out.count() == expected
+    assert out.distinct().count() == expected
 
-    # per-sub-key emission bound: a-side counts per (k, salt) x b-side
-    # counts per k (the b side is replicated across all salts for hot k)
-    salt = F.pmod(F.xxhash64(F.col("id"), F.lit(0x5317)), F.lit(N_BUCKET_SALTS))
-    a_counts = (
-        bucketed.filter(F.col("k") == 7)
-        .groupBy(salt.alias("s"))
-        .agg(F.count(F.lit(1)).alias("ca"))
-        .collect()
-    )
-    worst_salted = max(r["ca"] for r in a_counts) * 160
-    worst_plain = 160 * 160
+    # per-sub-key emission bound: every (k, salt) sub-key lands wholly in
+    # one join task; a-side counts per salt x b-side rows of the hot key
+    # (the b side is replicated across all salts for a hot k)
+    hot_a = a.filter(F.col("k") == 7)
+    salt = F.pmod(F.xxhash64(F.col("id"), F.lit(0x5317)), F.lit(dedup.N_BUCKET_SALTS))
+    a_counts = hot_a.groupBy(salt.alias("s")).agg(F.count(F.lit(1)).alias("ca")).collect()
+    worst_salted = max(r["ca"] for r in a_counts) * n_hot_b
+    worst_plain = hot_a.count() * n_hot_b
     assert worst_salted * 8 <= worst_plain, (
         f"salting spread too weak: worst sub-key emits {worst_salted}, "
         f"plain key emits {worst_plain}"
     )
 
 
-def test_incremental_minhash_salted_matches_plain_on_flood(spark):
+def test_salting_engages_and_balances_candidate_stage(spark, monkeypatch):
+    """Engagement evidence for the bucket self-join shape, deterministic
+    and timing-free.  (1) Wiring: the helper's physical plan joins on the
+    ``__salt`` sub-key (a missing salt in the condition would either
+    duplicate rows — caught by the counts — or show here).  (2) Balance:
+    on an identical-key flood the hot path's worst sub-key must emit at
+    least 8x fewer rows than the unsalted key (16 salts; 8x leaves room
+    for salt-hash imbalance).  Exactness on the real operators is pinned
+    by the *_matches_plain_on_flood tests."""
+    from apache_arrow_spark.functions import dedup
+
+    monkeypatch.setattr(dedup, "HOT_BUCKET_ROWS", 64)
+    # one hot bucket (160 ids) + a few cold ones
+    rows = [(i, 7) for i in range(160)] + [(1000 + i, i % 4 + 100) for i in range(40)]
+    bucketed = spark.createDataFrame(rows, "id long, k long")
+    expected = 160 * 159 // 2 + 4 * (10 * 9 // 2)
+    _assert_salted_and_balanced(bucketed, bucketed, 160, expected, self_join=True)
+
+
+def test_salting_engages_and_balances_two_frame_join(spark, monkeypatch):
+    """The same engagement evidence when the sides are different frames —
+    the batch-vs-corpus and probe-vs-index shape, where hotness comes
+    from one side's sizes.  ``a``: 160 ids on the hot key 7 and 20 on
+    cold keys; ``b``: 200 ids on key 7 (hot by b's sizes), 10 per cold
+    key, and a key only b holds."""
+    from apache_arrow_spark.functions import dedup
+
+    monkeypatch.setattr(dedup, "HOT_BUCKET_ROWS", 64)
+    a = spark.createDataFrame(
+        [(i, 7) for i in range(160)] + [(500 + i, 100 + i % 4) for i in range(20)],
+        "id long, k long",
+    )
+    b = spark.createDataFrame(
+        [(10_000 + i, 7) for i in range(200)]
+        + [(20_000 + i, 100 + i % 4) for i in range(40)]
+        + [(30_000 + i, 999) for i in range(90)],
+        "id long, k long",
+    )
+    expected = 160 * 200 + 4 * (5 * 10)
+    _assert_salted_and_balanced(a, b, 200, expected, self_join=False)
+
+
+def test_incremental_minhash_salted_matches_plain_on_flood(spark, monkeypatch):
     """The batch-vs-corpus twin: a hot CORPUS bucket splits into salted
     sub-keys; pairs must be identical to the plain join."""
     from apache_arrow_spark.functions.dedup import minhash_near_duplicates_against
@@ -218,9 +253,9 @@ def test_incremental_minhash_salted_matches_plain_on_flood(spark):
     docs = _flood_docs(spark, n_flood=200, n_noise=120)
     new = docs.filter("doc_id % 5 = 0")
     corpus = docs.filter("doc_id % 5 != 0")
-    kw = dict(jaccard_threshold=0.5)
-    salted = minhash_near_duplicates_against(new, corpus, hot_bucket_rows=64, **kw)
-    plain = minhash_near_duplicates_against(new, corpus, hot_bucket_rows=1 << 30, **kw)
+    salted, plain = _salted_and_plain(
+        monkeypatch, minhash_near_duplicates_against, new, corpus, jaccard_threshold=0.5
+    )
     cols = ("new_id", "corpus_id")
     assert _pairs(salted, cols) == _pairs(plain, cols)
     assert len(_pairs(salted, cols)) > 0

@@ -26,6 +26,14 @@ Only the tables the top-5 wall queries read are generated:
   q269 walks grows 3x in edges and supplier nodes without splitting
   into disjoint replicas (a key-disjoint copy would leave the BFS ball
   stuck in copy 0 and fake alpha ~ 0).
+- ``events`` (q263): three copies with ``user_id`` and ``event_id``
+  offset per copy, so each user's series is verbatim and per-key window
+  work scales 3x.  ``customer`` is copied verbatim and ``orders`` keep
+  ``o_custkey``, so two-thirds of the sf0.3 event ``user_id`` values
+  dangle against ``orders``/``customer``.  These rows are valid only for
+  per-key window queries such as q263; a query that joins events to
+  orders or customer (e.g. q248) gets a different join selectivity at
+  sf0.3 than at sf0.1 and must not be swept on this fixture.
 
 Usage: python tools/make_sf03.py [out_dir]
 Then:  python tools/scaling_curves.py /root/testdata/sf0.1 <out_dir> \

@@ -35,14 +35,10 @@ HOT_SINGLE_MS = 400  # a 1-task stage at least this long is a finding
 
 
 def _stages(spark):
-    gw = spark.sparkContext._gateway
-    store = spark.sparkContext._jsc.sc().statusStore()
-    el = gw.jvm.java.util.Collections.emptyList()
-    lst = store.stageList(el, False, False, gw.new_array(gw.jvm.double, 0), el)
+    from apache_arrow_spark.plans.inspect import _stage_list
+
     out = {}
-    it = lst.iterator()
-    while it.hasNext():
-        s = it.next()
+    for s in _stage_list(spark):
         dur = 0
         if s.completionTime().isDefined() and s.submissionTime().isDefined():
             dur = (
