@@ -30,6 +30,7 @@ from apache_arrow_spark.functions.text import (
     tokens,
 )
 from apache_arrow_spark.session import broadcast_if, compute_parallelism, measured, observed
+from apache_arrow_spark.session import free_local_checkpoint, truncate
 
 # xor-fold constants: a fixed seeded set of 64-bit masks; h_j(s) = h(s) XOR
 # R[j] is a family of bijections over int64 — the standard cheap stand-in for
@@ -356,7 +357,9 @@ def _minhash_verify(
         jac = F.round(inter / F.greatest(union, F.lit(1)), 6)
         # materialize the (tiny) verified pairs before the candidates are
         # released, then drop the intermediate caches — a long-lived
-        # session would otherwise leak block-manager memory on every call
+        # session would otherwise leak block-manager memory on every call.
+        # Eager on purpose: lazy verify cores measured q140 4.28 -> 6.81 s
+        # (sf0.1, local[4]).
         result = (
             pairs.withColumn("jaccard", jac)
             .filter(F.col("jaccard") >= jaccard_threshold)
@@ -496,25 +499,18 @@ def connected_components(
     shape does not arise from similarity-threshold pair generation.)
 
     The driver loop only ever materializes ONE scalar per round (the
-    changed-label count) — labels themselves stay distributed.  Each
-    round's labels are eagerly ``localCheckpoint``-ed: iterative plans
-    otherwise nest the whole history, and Catalyst re-analysis grows with
-    every round (seconds per iteration even on tiny graphs).  Lineage
-    truncation is the standard Spark idiom for iterative algorithms; on a
-    cluster that must survive executor loss, swap for ``checkpoint()`` on
-    reliable storage — same algorithm, same per-round cost.
+    changed-label count) — labels themselves stay distributed.  The edges
+    and each round's labels are cut with ``session.truncate`` and the
+    superseded round is freed at once, so the call leaves only the blocks
+    of the returned frame (a truncation root: ``free_local_checkpoint``
+    releases it).
     """
     e = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    edges = (
-        e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=True)
+    edges = truncate(
+        e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))).distinct()
     )
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("component", F.col("node"))
-        .localCheckpoint(eager=True)
+    labels = truncate(
+        edges.select(F.col("src").alias("node")).distinct().withColumn("component", F.col("node"))
     )
     for _ in range(max_iter):
         # neighbor labels flow along edges; union with own label, take min.
@@ -540,33 +536,31 @@ def connected_components(
                 F.min("__old").alias("__old"),
             )
         )
-        # the changed-label count rides the checkpoint job as an observed
+        # the changed-label count rides the truncation job as an observed
         # metric — the fixpoint test costs NO extra job (it used to be a
         # shuffle join + count, i.e. one whole extra job per round)
         from pyspark.sql import Observation
 
         obs = Observation()
-        new_labels = merged.observe(
-            obs,
-            F.coalesce(
-                F.sum(
-                    F.when(F.col("component") != F.col("__old"), 1).otherwise(0)
-                ),
-                F.lit(0),
-            ).alias("changed"),
-        ).localCheckpoint(eager=True)
+        flips = F.sum(F.when(F.col("component") != F.col("__old"), 1).otherwise(0))
+        new_labels = truncate(
+            merged.observe(obs, F.coalesce(flips, F.lit(0)).alias("changed"))
+            .select("node", "component")
+        )
         changed = observed(obs, "changed")
         if changed is None:
             # metrics ride Spark's async listener bus, which can drop
             # SQLExecutionEnd events under load — a blocking obs.get could
             # then hang forever (r10 ADVICE).  Bounded wait above; on
-            # timeout, fall back to ONE explicit count over the already-
-            # checkpointed frame (cheap: cached blocks, tiny plan).
-            changed = new_labels.filter(F.col("component") != F.col("__old")).count()
-        labels = new_labels.select("node", "component")
+            # timeout, fall back to ONE explicit count over the two
+            # truncated rounds (one row per node in each: cheap, tiny plan).
+            changed = new_labels.subtract(labels).count()
+        free_local_checkpoint(labels)
+        labels = new_labels
         if changed == 0:
             break
-    return labels.select("node", "component")
+    free_local_checkpoint(edges)
+    return labels
 
 
 def cluster_assignments(
@@ -584,8 +578,8 @@ def cluster_assignments(
     The component table holds only nodes that appear in a pair — usually
     far smaller than the corpus, but O(corpus x dup-rate) in the worst
     case, so the join back broadcasts only under the same measured-size
-    threshold as the verify stage (counting the localCheckpointed
-    component frame is one cheap job); above it, a shuffle join on the
+    threshold as the verify stage (counting the truncated component
+    frame is one cheap job); above it, a shuffle join on the
     id — never a pinned corpus-scale broadcast.
     """
     comp = connected_components(pairs, id_a, id_b)
@@ -810,7 +804,7 @@ def _verify_pairs(
             .select("id_a", "id_b", score_col)
             .persist()
         )
-        out.count()
+        out.count()  # eager on purpose: see _minhash_verify
     cells.unpersist()
     return out
 

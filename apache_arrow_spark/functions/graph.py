@@ -17,16 +17,18 @@ Scale + determinism discipline:
   destination sum is therefore an integer sum: order-independent,
   bit-reproducible, and expressible verbatim in SQL (the oracle unrolls
   the same ``iters`` rounds as chained CTEs);
-- lineage is truncated per round with ``localCheckpoint`` (the
-  connected-components lesson: Catalyst re-analysis otherwise grows with
-  nesting depth).  On a fault-tolerant cluster swap for ``checkpoint()``
-  on reliable storage.
+- lineage is cut per round with ``session.truncate`` (its docstring
+  holds the policy) and the superseded round is freed at once, so a call
+  leaves only the blocks of the frame it returns.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+
+from apache_arrow_spark.session import broadcast_if, compute_parallelism, observed
+from apache_arrow_spark.session import free_local_checkpoint, truncate
 
 
 def pagerank(
@@ -43,20 +45,20 @@ def pagerank(
     integer space (see module docstring), so two engines running the same
     rounds produce identical rank9 values.
     """
-    # checkpoint the EDGES first and derive everything else from the
-    # checkpointed lineage: the old order (deg.count(), then
-    # deg.localCheckpoint(), then edges.localCheckpoint()) evaluated the
-    # caller's whole pair pipeline THREE times — measured as nine
-    # repeated multi-second stages when the pairs came from the
-    # winnowing join (q127)
-    edges = (
-        pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-        .union(pairs.select(F.col(id_b).alias("u"), F.col(id_a).alias("v")))
-        .localCheckpoint()
+    # truncate the EDGES first and derive everything else from them: each
+    # frame derived from the raw pairs re-runs the caller's whole pair
+    # pipeline (measured nine repeated multi-second stages when the pairs
+    # came from q127's winnowing join)
+    edges = truncate(
+        pairs.select(F.col(id_a).alias("node"), F.col(id_b).alias("v")).union(
+            pairs.select(F.col(id_b).alias("node"), F.col(id_a).alias("v"))
+        )
     )
-    deg = edges.groupBy("u").agg(F.count(F.lit(1)).alias("deg")).localCheckpoint()
-    n = deg.count()  # driver scalar off the checkpoint — no recompute
+    deg = truncate(edges.groupBy("node").agg(F.count(F.lit(1)).alias("deg")))
+    n = deg.count()  # driver scalar off the truncated frame — no recompute
     if n == 0:
+        free_local_checkpoint(edges)
+        free_local_checkpoint(deg)
         return pairs.sparkSession.createDataFrame([], "node bigint, rank9 bigint")
     from fractions import Fraction
 
@@ -67,32 +69,35 @@ def pagerank(
     # double(0.85)*s and DECIMAL 0.85*s floor differently at integer
     # boundaries — a measured cross-engine trap)
     base9 = (10**9 * (dden - dnum) // dden) // n
-    r = deg.select("u", F.lit(init9).cast("long").alias("r9"))
-    nodes = deg.select(F.col("u").alias("v"))
+    r = deg.select("node", F.lit(init9).cast("long").alias("rank9"))
+    nodes = deg.select(F.col("node").alias("v"))
     for _ in range(iters):
-        carried = edges.join(r, "u").join(deg, "u")
+        carried = edges.join(r, "node").join(deg, "node")
         # exact integer division: numerator < 2^53 -> double division of
         # the exact multiple is exact and engine-identical (DuckDB twin:
         # r9 // deg)
         contrib = carried.select(
             "v",
-            ((F.col("r9") - F.col("r9") % F.col("deg")) / F.col("deg"))
+            ((F.col("rank9") - F.col("rank9") % F.col("deg")) / F.col("deg"))
             .cast("long")
             .alias("c"),
         )
         sums = contrib.groupBy("v").agg(F.sum("c").alias("s"))
         ds = F.lit(dnum) * F.coalesce(F.col("s"), F.lit(0))
-        r = (
-            nodes.join(sums, "v", "left")
-            .select(
-                F.col("v").alias("u"),
+        nxt = truncate(
+            nodes.join(sums, "v", "left").select(
+                F.col("v").alias("node"),
                 (F.lit(base9) + ((ds - ds % F.lit(dden)) / F.lit(dden)).cast("long"))
                 .cast("long")
-                .alias("r9"),
+                .alias("rank9"),
             )
-            .localCheckpoint()
         )
-    return r.select(F.col("u").alias("node"), F.col("r9").alias("rank9"))
+        free_local_checkpoint(r)
+        r = nxt
+    if iters > 0:  # else r still reads deg
+        free_local_checkpoint(deg)
+    free_local_checkpoint(edges)
+    return r
 
 
 def triangle_stats(
@@ -182,16 +187,8 @@ def bfs_khop(
     on the join key (repartition first, then dropDuplicates — the
     aggregate reuses the partitioning), so each round shuffles only the
     frontier side.  The loop count is a LITERAL bound, so the job graph
-    is static; each round is localCheckpointed to keep lineage flat
-    (the q79 connected-components discipline) and the superseded
-    round's blocks are freed eagerly (the q78 lesson)."""
-    from apache_arrow_spark.session import (
-        broadcast_if,
-        compute_parallelism,
-        free_local_checkpoint,
-        observed,
-    )
-
+    is static; each round is truncated to keep lineage flat and the
+    superseded round's blocks are freed eagerly (module docstring)."""
     spark = edges.sparkSession
     und = (
         edges.select(F.col(src_col).cast("long").alias("a"), F.col(dst_col).cast("long").alias("b"))
@@ -204,14 +201,12 @@ def bfs_khop(
         .dropDuplicates(["a", "b"])
         .persist()
     )
-    dist = spark.createDataFrame(
-        [(int(s), 0) for s in seeds], "node long, dist int"
-    ).localCheckpoint()
-    # the found-set's cardinality rides each round's checkpoint job as an
+    dist = truncate(spark.createDataFrame([(int(s), 0) for s in seeds], "node long, dist int"))
+    # the found-set's cardinality rides each round's truncation job as an
     # observed metric (the connected-components fixpoint discipline) so
     # the NEXT hop's visited-set anti-join can broadcast a measured-small
     # found set instead of re-shuffling + sorting it every round — the
-    # checkpointed LogicalRDD carries no size statistics, so without the
+    # truncated LogicalRDD carries no size statistics, so without the
     # hint the anti join is a sort-merge that re-exchanges the whole
     # accumulated distance table per hop.  Bounded read with a shuffle
     # fallback: an unresolved metric (dropped listener event) just means
@@ -230,11 +225,7 @@ def bfs_khop(
         from pyspark.sql import Observation
 
         obs = Observation()
-        merged = (
-            dist.unionByName(new_nodes)
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint()
-        )
+        merged = truncate(dist.unionByName(new_nodes).observe(obs, F.count(F.lit(1)).alias("n")))
         # next frontier: nodes whose best distance IS this hop (newly found)
         frontier = merged.filter(F.col("dist") == hop)
         free_local_checkpoint(dist)

@@ -367,7 +367,6 @@ def curate_corpus(
     strata_col: str = "lang",
     text_col: str = "text",
     key_col: str = "doc_id",
-    eager_checkpoint: bool = False,
 ) -> dict[str, DataFrame]:
     """End-to-end corpus curation: the full pretraining data funnel as one
     composition of this engine's operators —
@@ -377,8 +376,9 @@ def curate_corpus(
 
     Returns an ORDERED dict of stage name -> DataFrame (each stage is the
     corpus surviving to that point; ``split`` carries the final corpus
-    plus its ``split`` column).  Everything is lazily composed — callers
-    pick which stages to materialize.
+    plus its ``split`` column).  Every stage after ``raw`` is materialized
+    and truncated (``session.truncate``); release them with
+    ``free_local_checkpoint``.
 
     Near-dup policy: for every verified pair (id_a < id_b, jaccard >=
     threshold), the LARGER id drops — deterministic and engine-portable.
@@ -391,26 +391,22 @@ def curate_corpus(
         minhash_near_duplicates,
     )
     from apache_arrow_spark.functions.filters import decontaminate
+    from apache_arrow_spark.session import truncate
 
-    # eager_checkpoint=True materializes each stage and TRUNCATES its
-    # lineage (localCheckpoint) before the next builds on it: the lazy
-    # composition embeds the entire upstream tree in every downstream
-    # plan, so a caller that executes all stages (the funnel report)
-    # pays Catalyst analysis of ever-growing trees per action — measured
-    # ~16 s of a 23 s q78 wall in pure driver planning.  Values are
-    # identical either way; keep the default lazy for callers that
-    # materialize only one stage.
-    ck = (lambda df: df.localCheckpoint()) if eager_checkpoint else (lambda df: df)
+    # truncate each stage before the next builds on it: a lazily composed
+    # stage embeds the whole upstream tree, so a caller executing every
+    # stage (the funnel report) pays Catalyst analysis of ever-growing
+    # trees per action — measured ~16 s of a 23 s q78 wall
     stages: dict[str, DataFrame] = {"raw": docs}
-    quality = ck(docs.filter(token_count(F.col(text_col)) >= min_tokens))
+    quality = truncate(docs.filter(token_count(F.col(text_col)) >= min_tokens))
     stages["quality"] = quality
-    exact = ck(exact_dedup(quality, text_col, key_col))
+    exact = truncate(exact_dedup(quality, text_col, key_col))
     stages["exact_dedup"] = exact
     pairs = minhash_near_duplicates(
         exact, text_col, key_col, jaccard_threshold=jaccard_threshold
     )
     drop = pairs.select(F.col("id_b").alias(key_col)).distinct()
-    near = ck(exact.join(drop, key_col, "left_anti"))
+    near = truncate(exact.join(drop, key_col, "left_anti"))
     stages["near_dedup"] = near
     decon = decontaminate(
         near,
@@ -420,7 +416,7 @@ def curate_corpus(
         id_col=key_col,
         mode="drop",
     )
-    decon = ck(decon)
+    decon = truncate(decon)
     stages["decontaminated"] = decon
     sampled = stratified_sample(
         decon,
@@ -430,9 +426,9 @@ def curate_corpus(
         default=default_fraction,
         salt="curate",
     )
-    sampled = ck(sampled)
+    sampled = truncate(sampled)
     stages["sampled"] = sampled
-    stages["split"] = ck(group_split(sampled, key_col))
+    stages["split"] = truncate(group_split(sampled, key_col))
     return stages
 
 

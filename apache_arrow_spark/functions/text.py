@@ -278,21 +278,17 @@ def bpe_train_merges(
     of the sequential algorithm (each round's counts depend on the
     previous merge); production vocab sizes batch tens of merges per
     round with the same plan shape."""
-    from apache_arrow_spark.session import free_local_checkpoint, spread_compute
+    from apache_arrow_spark.session import free_local_checkpoint, spread_compute, truncate
 
     # spread once up front: every round's pair count AND the replace
     # rewrite chain are narrow, so a single-split source would serialize
     # all n_merges corpus passes on one core (measured five ~1 s
     # single-task stages at sf0.1); the exchange moves raw text once.
-    # localCheckpoint the symbol table: without it every ROUND's job
-    # re-ran the single-task raw scan and the spread exchange (r10
-    # profile: four ~0.5 s 1-task stages per call) — the iterative-path
-    # lineage-truncation convention (CC/pagerank/bfs) applied here; on a
-    # fault-tolerant cluster swap for checkpoint() on reliable storage.
-    seq0 = (
-        spread_compute(df.select(F.col(text_col)))
-        .select(bpe_symbols(F.col(text_col)).alias("q"))
-        .localCheckpoint(eager=True)
+    # truncate the symbol table: without it every ROUND's job re-ran the
+    # single-task raw scan and the spread exchange (r10 profile: four
+    # ~0.5 s 1-task stages per call).
+    seq0 = truncate(
+        spread_compute(df.select(F.col(text_col))).select(bpe_symbols(F.col(text_col)).alias("q"))
     )
     seq = seq0
     merges: list[tuple[str, str, int]] = []

@@ -25,6 +25,8 @@ import os
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
+from apache_arrow_spark.log import warn_once
+
 
 def _shards(path: str) -> list[str]:
     """The IPC files behind ``path``: a shard directory's ``*.arrow`` and
@@ -170,16 +172,18 @@ def register_ipc_source(spark) -> None:
     # one) and never changes values, only pruning.
     try:
         spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    except Exception:
-        pass  # static-conf session: pushFilters simply won't be called
+    except Exception as e:
+        # static-conf session: pushFilters simply won't be called
+        warn_once("ipc_pushdown", "aas_ipc filter pushdown unavailable (%s): full scans", e)
     try:
         import sys
 
         from pyspark import cloudpickle as _cp
 
         _cp.register_pickle_by_value(sys.modules[__name__])
-    except Exception:
-        pass  # older cloudpickle: fall back to by-reference (repo-cwd only)
+    except Exception as e:
+        # older cloudpickle: fall back to by-reference (repo-cwd only)
+        warn_once("ipc_by_value", "aas_ipc pickled by reference (%s): repo cwd only", e)
     spark.dataSource.register(ArrowIPCDataSource)
 
 

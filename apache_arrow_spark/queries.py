@@ -2365,17 +2365,10 @@ def q78_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         bench,
         fractions={"en": 0.7, "de": 1.0},
         default_fraction=0.5,
-        # the funnel executes EVERY stage — checkpoint each so downstream
-        # plans stay flat instead of embedding the whole upstream tree
-        # (measured ~16 s of pure Catalyst planning otherwise)
-        eager_checkpoint=True,
     )
     out = curation_funnel(stages)
     # curation_funnel's result is a LOCAL DataFrame (counts already
-    # collected), so the stage checkpoints' storage blocks can be freed
-    # eagerly instead of waiting for GC + ContextCleaner — via the
-    # LogicalRDD's backing RDD (DataFrame.rdd would be a fresh wrapper,
-    # not the persisted RDD; unpersisting it frees nothing)
+    # collected): free the truncated stages now, not at GC
     from apache_arrow_spark.session import free_local_checkpoint
 
     for df in stages.values():

@@ -150,13 +150,31 @@ def spread_compute(df: DataFrame, *key_cols: str) -> DataFrame:
     return df.repartition(target)
 
 
+def truncate(df: DataFrame) -> DataFrame:
+    """THE lineage cut for iterative operators: materialize ``df`` and
+    return a twin rooted at its rows (release with ``free_local_checkpoint``).
+    Without a cut, Catalyst re-analysis grows with loop depth.  With a
+    checkpoint directory set (``setCheckpointDir``, a deployment setting)
+    the rows go to reliable ``checkpoint()`` files, which can be read again
+    after an executor is lost.  Otherwise — also without a ``sparkContext``
+    (Spark Connect) — ``localCheckpoint`` keeps them as executor blocks,
+    which cannot be recomputed once lost: the job then fails loudly."""
+    try:
+        reliable = df.sparkSession.sparkContext.getCheckpointDir() is not None
+    except Exception as e:
+        warn_once("truncate", "no sparkContext (%s): local checkpoint", e)
+        reliable = False
+    return df.checkpoint(eager=True) if reliable else df.localCheckpoint(eager=True)
+
+
 def free_local_checkpoint(df: DataFrame) -> bool:
-    """Eagerly release the storage blocks of a ``df.localCheckpoint()``
-    result once nothing will read it again.  ``df.rdd.unpersist()`` does
+    """Eagerly release the storage blocks of a ``truncate`` or
+    ``localCheckpoint`` result once nothing will read it again (a reliable
+    checkpoint holds no blocks; its files stay).  ``df.rdd.unpersist()`` does
     NOT do this — ``DataFrame.rdd`` builds a fresh javaToPython wrapper
     RDD, not the persisted RDD inside the plan — so this reaches the
     ``LogicalRDD`` node's backing RDD through the analyzed plan.  Returns
-    True when a block was actually unpersisted; False (never raises) when
+    True when that backing RDD was unpersisted; False (never raises) when
     the plan is not a checkpoint root (e.g. Spark Connect, or a derived
     DataFrame), where blocks fall back to GC + ContextCleaner."""
     try:

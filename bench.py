@@ -129,15 +129,10 @@ def _stage_shuffle_writes(spark) -> dict[int, int]:
     (stageId -> bytes, attempts summed).  Shuffle volume is deterministic
     for a fixed plan + data, so one reading per query gives a noise-free
     regression metric next to the wall timings."""
-    sc = spark.sparkContext
-    jvm, gw = sc._jvm, sc._gateway
-    store = sc._jsc.sc().statusStore()
-    empty = jvm.java.util.ArrayList()
-    darr = gw.new_array(gw.jvm.double, 0)
-    stages = store.stageList(empty, False, False, darr, empty)
+    from apache_arrow_spark.plans.inspect import _stage_list
+
     out: dict[int, int] = {}
-    for i in range(stages.size()):
-        s = stages.apply(i)
+    for s in _stage_list(spark):
         out[s.stageId()] = out.get(s.stageId(), 0) + s.shuffleWriteBytes()
     return out
 
@@ -178,15 +173,10 @@ def _stage_metric_totals(spark) -> dict:
     actually ON a core, gc_ms stop-the-world time.  Per-rep deltas
     separate 'the JVM was slow' from 'the tasks were off-CPU' (ambient
     contention), which a wall clock alone cannot."""
-    sc = spark.sparkContext
-    jvm, gw = sc._jvm, sc._gateway
-    store = sc._jsc.sc().statusStore()
-    empty = jvm.java.util.ArrayList()
-    darr = gw.new_array(gw.jvm.double, 0)
-    stages = store.stageList(empty, False, False, darr, empty)
+    from apache_arrow_spark.plans.inspect import _stage_list
+
     tot = {"run_ms": 0, "cpu_ns": 0, "gc_ms": 0, "fetch_wait_ms": 0}
-    for i in range(stages.size()):
-        s = stages.apply(i)
+    for s in _stage_list(spark):
         tot["run_ms"] += s.executorRunTime()
         tot["cpu_ns"] += s.executorCpuTime()
         tot["gc_ms"] += s.jvmGcTime()
@@ -223,7 +213,7 @@ def _anchor_sort(spark) -> tuple[float, list[float], list[dict]]:
 
     n = 1 << 25
     cores = spark.sparkContext.defaultParallelism
-    df = spark.range(n, numPartitions=32).select((F.rand(seed=7) * 1e9).alias("x")).cache()
+    df = spark.range(n, numPartitions=cores).select((F.rand(seed=7) * 1e9).alias("x")).cache()
     df.count()
     rates = []
     reps: list[dict] = []
@@ -233,10 +223,10 @@ def _anchor_sort(spark) -> tuple[float, list[float], list[dict]]:
     # computed over a ramp-dominated sample and made it read as a
     # regression.  The steady-state number is the median of reps 8-16;
     # plan note: orderBy's sample -> range-partition -> local radix sort
-    # already lands 32+ balanced partitions (AQE does not coalesce it);
-    # measured alternatives (coalesce off, 64/128 shuffle partitions) are
-    # all equal or slower, so rep statistics — not the plan — are the
-    # honest lever here.
+    # already lands shuffle.partitions balanced partitions (AQE does not
+    # coalesce it); measured alternatives (coalesce off, 64/128 shuffle
+    # partitions) are all equal or slower, so rep statistics — not the
+    # plan — are the honest lever here.
     for _ in range(16):
         try:
             before = _stage_metric_totals(spark)
@@ -331,7 +321,7 @@ def main():
     QUERIES["q06_countby_returnflag"](spark, sf_dir).write.format("noop").mode("overwrite").save()
     # warm the Python worker pool (first mapInPandas/mapInArrow stage
     # otherwise pays interpreter fork + Arrow import inside a timed query)
-    spark.range(2**12).repartition(32).mapInPandas(
+    spark.range(2**12).repartition(spark.sparkContext.defaultParallelism).mapInPandas(
         lambda it: it, "id bigint"
     ).write.format("noop").mode("overwrite").save()
 

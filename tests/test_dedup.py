@@ -382,6 +382,19 @@ def test_remove_duplicated_spans_fully_covered_doc(spark):
     assert out[2]["cleaned_text"] == ""
 
 
+def test_connected_components_count_fallback_matches(spark, monkeypatch):
+    """An undelivered fixpoint metric routes every round to the explicit
+    changed-label count, which reaches the same components."""
+    import apache_arrow_spark.functions.dedup as dedup
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (10, 11)], "id_a long, id_b long"
+    )
+    monkeypatch.setattr(dedup, "observed", lambda obs, metric: None)
+    got = {r["node"]: r["component"] for r in dedup.connected_components(pairs).collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
+
+
 def test_observed_changed_bounded_wait_returns_none_without_action(
     spark, monkeypatch, caplog
 ):

@@ -1,27 +1,33 @@
 """Fault injection for the iterative, lineage-truncated paths (r9
-verdict #4): connected components, PageRank, and BFS k-hop rely on
-``localCheckpoint`` lineage truncation — the engine's analog of the
+verdict #4): connected components, PageRank, and BFS k-hop cut their
+lineage with ``session.truncate`` — the engine's analog of the
 reference's Plasma crash-tolerance story (cpp/src/plasma/store.cc's
 client-disconnect / eviction handling: a lost object is either
 refetchable or a loud error, never silently wrong data).
 
-Contract under storage faults: when cached / checkpointed blocks vanish
-mid-iteration, the job must either (a) recompute and return the exact
-clean-run result, or (b) fail LOUDLY with an exception.  It must never
-return silently wrong labels/ranks/distances.  In local mode we cannot
-kill an executor, so the chaos thread drives the same failure surface
-one level down: it repeatedly asks the BlockManagerMaster to drop every
-RDD block materialized after the test began — exactly what executor
-loss does to cached partitions.  A dropped *locally checkpointed* block
-is unrecoverable by design (lineage was truncated), so outcome (b) is
-expected and accepted there; a dropped plain-persist block must
-recompute into outcome (a).
+In local mode we cannot kill an executor, so the chaos thread drives the
+same failure surface one level down: it repeatedly asks the
+BlockManagerMaster to drop every RDD block materialized after the test
+began — exactly what executor loss does to cached partitions.  Two
+contracts follow, one per truncation path:
 
-The assertion strategy runs each op under chaos several times and
-accepts any mix of (a)/(b), failing the test only on a wrong-result
-run.  Chaos timing is inherently racy; the loop makes the window wide
-enough that drops land mid-iteration in practice (verified by the
-drop counter).
+- **Checkpoint directory set** (``truncate`` writes reliable
+  ``checkpoint()`` files): every run returns the exact clean-run result.
+  Truncated rounds live in files the chaos cannot drop, and a dropped
+  plain-persist block recomputes from lineage.
+- **No checkpoint directory** (``truncate`` takes ``localCheckpoint``): a
+  run either returns the exact result or fails LOUDLY with an exception.
+  A dropped locally checkpointed block is unrecoverable by design
+  (lineage was cut), so the loud failure is accepted there — but a
+  silently wrong label/rank/distance never is.
+
+Each op runs under chaos several times.  Chaos timing is inherently
+racy; the loop makes the window wide enough that drops land
+mid-iteration in practice (verified by the drop counter).
+
+A block-release fence rides along: an iterative call leaves only the
+blocks of the frame it returns, and the lazy LM / retrieval operators
+leave none.
 """
 
 import threading
@@ -155,3 +161,72 @@ def test_bfs_khop_chaos(spark, chain_pairs):
     )
     assert n_ok + n_loud == 4
     assert drops > 0, "chaos thread never dropped a block — test is vacuous"
+
+
+def _graph_op(op):
+    from apache_arrow_spark.functions.dedup import connected_components
+    from apache_arrow_spark.functions.graph import bfs_khop, pagerank
+
+    return {
+        "connected_components": lambda p: connected_components(p),
+        "pagerank": lambda p: pagerank(p, iters=8),
+        "bfs_khop": lambda p: bfs_khop(
+            p, seeds=[0], max_hops=25, src_col="id_a", dst_col="id_b"
+        ),
+    }[op]
+
+
+@pytest.fixture
+def checkpoint_dir(spark, tmp_path):
+    """A reliable checkpoint directory for one test; the session's unset
+    state is restored after it, so every other test keeps the local cut."""
+    sc = spark.sparkContext
+    sc.setCheckpointDir(str(tmp_path))
+    yield tmp_path
+    getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
+    assert sc.getCheckpointDir() is None
+
+
+@pytest.mark.parametrize("op", ["connected_components", "pagerank", "bfs_khop"])
+def test_chaos_exact_with_reliable_checkpoint(spark, chain_pairs, checkpoint_dir, op):
+    fn = _graph_op(op)
+    expected = _sorted_rows(fn(chain_pairs))
+    assert expected
+    before = set(checkpoint_dir.rglob("part-*"))
+    n_ok, _n_loud, drops = _run_under_chaos(
+        spark, lambda: _sorted_rows(fn(chain_pairs)), expected
+    )
+    assert n_ok == 4, "a reliable checkpoint must recompute, never fail"
+    # the truncated rounds went to files: the reliable path ran
+    assert set(checkpoint_dir.rglob("part-*")) - before
+    if op == "bfs_khop":
+        # its persisted edge table is still a block the chaos can drop
+        assert drops > 0, "chaos thread never dropped a block — test is vacuous"
+
+
+def _persistent_ids(spark):
+    return {
+        int(str(k))
+        for k in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
+    }
+
+
+@pytest.mark.parametrize("op", ["connected_components", "pagerank", "bfs_khop"])
+def test_iterative_call_leaves_only_returned_blocks(spark, chain_pairs, op):
+    from apache_arrow_spark.session import free_local_checkpoint
+
+    before = _persistent_ids(spark)
+    out = _graph_op(op)(chain_pairs)
+    assert out.count() > 0
+    assert free_local_checkpoint(out), "the result must be a truncation root"
+    assert _persistent_ids(spark) - before == set()
+
+
+@pytest.mark.parametrize("name", ["q100_unigram_nll", "q219_more_like_this"])
+def test_lazy_operator_queries_leave_no_cached_blocks(spark, sf_dir, name):
+    from apache_arrow_spark.queries import QUERIES
+
+    for _ in range(2):  # no clearCache() between the calls
+        before = _persistent_ids(spark)
+        assert QUERIES[name](spark, sf_dir).collect()
+        assert _persistent_ids(spark) - before == set()

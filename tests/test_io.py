@@ -432,6 +432,46 @@ def test_custom_datasource_decodes_dictionary_shards(spark, tmp_path):
     assert back.filter(F.col("cat") == "2").count() == df.filter(F.col("cat") == "2").count()
 
 
+@pytest.mark.parametrize(
+    "failing,message",
+    [("pushdown", "filter pushdown unavailable"), ("by_value", "pickled by reference")],
+)
+def test_ipc_source_degrade_still_registers_and_warns_once(
+    spark, tmp_path, monkeypatch, caplog, failing, message
+):
+    """A refused filter-pushdown conf, or a failed by-value pickling
+    registration, still registers a readable connector and logs one WARN
+    per process."""
+    import logging
+    import types
+
+    from pyspark import cloudpickle
+
+    import apache_arrow_spark.log as log_mod
+    from apache_arrow_spark.io.datasource import register_ipc_source
+    from apache_arrow_spark.io.ipc import write_ipc
+
+    def _raise(*_args):
+        raise RuntimeError("refused")
+
+    session = spark
+    if failing == "pushdown":
+        session = types.SimpleNamespace(
+            conf=types.SimpleNamespace(set=_raise), dataSource=spark.dataSource
+        )
+    else:
+        monkeypatch.setattr(cloudpickle, "register_pickle_by_value", _raise)
+    monkeypatch.setattr(log_mod, "_warned", set())
+    root = str(tmp_path / "shards")
+    write_ipc(spark.range(100), root)
+    with caplog.at_level(logging.WARNING, logger="apache_arrow_spark"):
+        register_ipc_source(session)
+        register_ipc_source(session)
+    assert spark.read.format("aas_ipc").load(root).count() == 100
+    warns = [r for r in caplog.records if r.name == "apache_arrow_spark"]
+    assert len(warns) == 1 and message in warns[0].getMessage()
+
+
 def test_custom_datasource_streaming_matches_batch(spark, tmp_path):
     import uuid
 

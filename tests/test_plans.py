@@ -948,6 +948,32 @@ def test_compute_parallelism_falls_back_to_shuffle_partitions(spark, monkeypatch
     assert len(warns) == 1 and "sparkContext" in warns[0].getMessage()
 
 
+def test_truncate_without_context_takes_local_cut_and_warns_once(spark, monkeypatch, caplog):
+    """Without a sparkContext ``truncate`` cannot see a checkpoint
+    directory: it takes the local cut and logs one WARN per process."""
+    import logging
+    import types
+
+    import apache_arrow_spark.log as log_mod
+    from apache_arrow_spark.session import free_local_checkpoint, truncate
+
+    monkeypatch.setattr(log_mod, "_warned", set())
+    df = spark.range(10)
+    calls = []
+    stub = types.SimpleNamespace(
+        sparkSession=_NoContextSession(spark),
+        localCheckpoint=lambda eager: calls.append(("local", eager)) or df.localCheckpoint(eager),
+        checkpoint=lambda eager: calls.append(("reliable", eager)),
+    )
+    with caplog.at_level(logging.WARNING, logger="apache_arrow_spark"):
+        cuts = [truncate(stub), truncate(stub)]
+    assert calls == [("local", True)] * 2
+    assert [c.count() for c in cuts] == [10, 10]
+    assert all(free_local_checkpoint(c) for c in cuts)
+    warns = [r for r in caplog.records if r.name == "apache_arrow_spark"]
+    assert len(warns) == 1 and "sparkContext" in warns[0].getMessage()
+
+
 def test_spread_compute_unevaluable_guard_is_identity_and_warns(monkeypatch, caplog):
     import logging
     import types
