@@ -16,12 +16,14 @@ Scale design:
   corpus is re-partitioned or re-run — the properties `rand()` lacks.
   The same decision rule can run in any engine (the oracle runs it in
   DuckDB) — important when ingest and training pipelines differ.
-- ``pack_sequences`` needs a GLOBAL running sum in id order; a naive
-  window over ``ORDER BY id`` with no partition key is a single-task
-  bottleneck.  It is computed as a distributed prefix-sum instead:
-  range-partition by id, partition-local window cumsum, then add each
-  partition's broadcast prefix offset (one row per partition ever leaves
-  the executors).
+- Every GLOBAL ordered scan (``global_value_rank``,
+  ``global_running_min``, ``global_running_sum``, ``global_sequence_gaps``
+  and ``pack_sequences``, which is a running sum) runs on ONE core,
+  ``_range_scan``: a naive window over ``ORDER BY key`` with no partition
+  key is a single-task bottleneck, so the scan range-partitions by the
+  key, folds one aggregate per range on the driver into per-range
+  offsets, and adds them to a partition-local window (one row per range
+  ever leaves the executors).
 - ``deterministic_shuffle`` orders within shards (window PARTITIONed by
   shard), never globally.
 - ``vocabulary`` is explode -> map-side-combinable count -> TakeOrdered
@@ -30,10 +32,14 @@ Scale design:
 
 from __future__ import annotations
 
+import operator
+
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql.types import ArrayType, DataType, IntegralType, LongType
 
 from apache_arrow_spark.functions.text import token_count, tokens
+from apache_arrow_spark.session import compute_parallelism, truncate
 
 # 15 hex digits = 60 bits: fits a signed int64 in both Spark (conv->bigint)
 # and DuckDB ('0x..'::BIGINT), so the decision rule is engine-portable.
@@ -256,49 +262,6 @@ def token_budget_cap(
     )
 
 
-def _exclusive_prefix_sum(
-    df: DataFrame, order_col: str, val_col: str, out_col: str, n_part: int = 0
-) -> DataFrame:
-    """Distributed exclusive prefix sum of ``val_col`` in ``order_col``
-    order.
-
-    Range-partition by the order key, window-cumsum WITHIN each partition,
-    then add the partition's global offset (computed from per-partition
-    totals — one tiny row per partition crosses to the driver, the same
-    driver-materialization budget as a shard manifest).  A plain
-    ``ORDER BY`` window with no partition key would serialize the whole
-    table through one task.
-    """
-    spark = df.sparkSession
-    n_part = n_part or max(spark.sparkContext.defaultParallelism, 8)
-    part = df.repartitionByRange(n_part, F.col(order_col)).withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    part = part.persist()
-    # per-partition totals: n_part rows, two longs each
-    totals = {
-        r["__pid"]: r["__t"]
-        for r in part.groupBy("__pid").agg(F.sum(val_col).alias("__t")).collect()
-    }
-    offsets, run = {}, 0
-    for pid in sorted(totals):
-        offsets[pid] = run
-        run += totals[pid] or 0
-    w = (
-        Window.partitionBy("__pid")
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    local = F.coalesce(F.sum(val_col).over(w), F.lit(0).cast("bigint"))
-    off = F.create_map(
-        *[x for pid in sorted(offsets) for x in (F.lit(pid), F.lit(offsets[pid]))]
-    )
-    out = part.withColumn(out_col, (local + off[F.col("__pid")]).cast("bigint")).drop(
-        "__pid"
-    )
-    return out
-
-
 def pack_sequences(
     df: DataFrame,
     budget: int,
@@ -311,8 +274,8 @@ def pack_sequences(
     bin boundary; ``bin_offset`` says where a doc starts inside its bin).
 
     Returns (id, tokens, bin_id, bin_offset) where ``bin_id =
-    floor(exclusive_cumsum / budget)``.  The global cumsum is a
-    distributed prefix sum (see :func:`_exclusive_prefix_sum`) — no
+    floor(exclusive_cumsum / budget)``.  The exclusive cumsum is
+    :func:`global_running_sum` minus each row's own tokens — no
     single-task window, no collect of data rows.
     """
     if budget <= 0:
@@ -321,12 +284,12 @@ def pack_sequences(
         F.col(id_col),
         F.coalesce(token_count(F.col(text_col)), F.lit(0)).alias("tokens"),
     )
-    pre = _exclusive_prefix_sum(toks, id_col, "tokens", "__pre")
-    return pre.select(
+    pre = F.col("__cum") - F.col("tokens")
+    return global_running_sum(toks, [id_col], "tokens", "__cum").select(
         id_col,
         "tokens",
-        F.floor(F.col("__pre") / budget).cast("bigint").alias("bin_id"),
-        (F.col("__pre") % budget).cast("bigint").alias("bin_offset"),
+        F.floor(pre / budget).cast("bigint").alias("bin_id"),
+        (pre % budget).cast("bigint").alias("bin_offset"),
     )
 
 
@@ -585,66 +548,89 @@ def bpe_pair_counts(
     return counted.orderBy(F.desc("cnt"), F.asc("pair")).limit(top_n)
 
 
+def _range_scan(
+    df: DataFrame, order_cols: list[str], part_agg: Column
+) -> tuple[DataFrame, list[tuple[int, object]]]:
+    """THE distributed ordered scan under every global ordered primitive
+    here — the offsets-buffer computation of the reference's list layout
+    (format/Layout.md) at table scale.  Range-partitions ``df`` on
+    ``order_cols`` into ``compute_parallelism`` ranges, tags each row
+    with its range ``__pid``, cuts the lineage with ``session.truncate``,
+    and collects ``part_agg`` once per non-empty range.  Returns ``(p,
+    [(pid, agg), ...])`` in pid order, which is key order; the caller
+    folds the aggregates into per-range offsets (:func:`_exclusive_fold`)
+    and adds them to a window partitioned by ``__pid`` — so no single-task
+    ``OVER (ORDER BY ...)`` window ever runs, and one row per range
+    crosses to the driver.
+
+    The cut pins the ranges: boundaries are sample-derived, so a
+    recompute could draw different ones and invalidate the collected
+    offsets.  The explicit range count keeps AQE from coalescing a small
+    input into one range, i.e. one task."""
+    p = truncate(
+        df.repartitionByRange(
+            compute_parallelism(df.sparkSession), *[F.col(c) for c in order_cols]
+        ).withColumn("__pid", F.spark_partition_id())
+    )
+    rows = p.groupBy("__pid").agg(part_agg.alias("__a")).collect()
+    return p, sorted((r["__pid"], r["__a"]) for r in rows)  # pids are unique
+
+
+def _exclusive_fold(aggs: list[tuple[int, object]], op, acc=None):
+    """Exclusive scan of per-range aggregates: ``([(pid, fold of every
+    EARLIER range's agg)], fold of all)``, starting from ``acc``.  NULL
+    aggregates (a range whose values are all NULL) are skipped, so with
+    ``acc=None`` an offset is NULL until the first non-NULL range."""
+    out = []
+    for pid, a in aggs:
+        out.append((pid, acc))
+        if a is not None:
+            acc = a if acc is None else op(acc, a)
+    return out, acc
+
+
+def _pid_offsets(offsets: list[tuple[int, object]], dtype: DataType) -> Column:
+    """Each row's range offset: a ``__pid -> value`` map of type ``dtype``
+    looked up at ``__pid``.  Empty input has no ranges; the typed empty
+    map keeps the lookup well-typed (it never evaluates on zero rows)."""
+    if not offsets:
+        m = F.map_from_arrays(
+            F.array().cast("array<int>"), F.array().cast(ArrayType(dtype))
+        )
+    else:
+        m = F.create_map(
+            *[x for pid, v in offsets for x in (F.lit(pid), F.lit(v).cast(dtype))]
+        )
+    return m[F.col("__pid")]
+
+
 def global_value_rank(
     df: DataFrame,
     order_cols: list[str],
     rank_col: str = "rank",
 ) -> DataFrame:
-    """Distributed global rank by VALUE (1-based, exact): range-repartition
-    on the order columns, rank locally inside each range, then add
-    broadcast per-partition offsets — the global order statistic with NO
+    """Distributed global rank by VALUE (1-based, exact): a
+    :func:`_range_scan` counting each range, local ``row_number`` plus
+    the count of every earlier range — the global order statistic with NO
     single-task window (``row_number() OVER (ORDER BY ...)`` funnels the
     whole dataset through one task; this never does).
 
     ``order_cols`` must form a total order (include a unique tiebreaker
     column) — with ties the cross-partition rank would depend on partition
-    boundaries.  The offsets are one count per partition (driver-budget
-    rows).  The input is persisted so the offset pass and the rank pass
-    see the identical range partitioning.
-
-    Cache ownership: the returned plan DEPENDS on that persisted input
-    (range-partition boundaries are sample-derived; a recompute could
-    draw different boundaries and invalidate the collected offsets), so
-    this function cannot unpersist it.  The CALLER owns the cache —
-    after fully consuming (or re-materializing) the result, release it
-    via the ``_aas_rank_source`` attribute stashed on the returned
-    DataFrame (``out._aas_rank_source.unpersist()``), or with
-    ``spark.catalog.clearCache()``.
+    boundaries.  The total row count is already known from the range
+    counts; callers needing it (tercile/quota arithmetic) read
+    ``out._aas_rank_total`` instead of paying a whole count() job.
 
     This is the scalable primitive under rank-based stratification,
     percentile bucketing, and top-fraction selection at 100 TB."""
-    cols = [F.col(c) for c in order_cols]
-    p = (
-        df.repartitionByRange(*cols)
-        .withColumn("__pid", F.spark_partition_id())
-        .persist()
-    )
-    counts = sorted(
-        p.groupBy("__pid").agg(F.count(F.lit(1)).alias("__n")).collect(),
-        key=lambda r: r["__pid"],
-    )
-    off, pairs = 0, []
-    for r in counts:
-        pairs += [F.lit(r["__pid"]), F.lit(off)]
-        off += r["__n"]
-    # empty input: no partitions counted — any typed empty map keeps the
-    # lookup well-typed (the column never evaluates on zero rows anyway)
-    omap = (
-        F.create_map(*pairs)
-        if pairs
-        else F.map_from_arrays(
-            F.array().cast("array<int>"), F.array().cast("array<bigint>")
-        )
-    )
-    w = Window.partitionBy("__pid").orderBy(*cols)
+    p, counts = _range_scan(df, order_cols, F.count(F.lit(1)))
+    before, total = _exclusive_fold(counts, operator.add, 0)
+    w = Window.partitionBy("__pid").orderBy(*order_cols)
     out = p.withColumn(
-        rank_col, (F.row_number().over(w) + omap[F.col("__pid")]).cast("bigint")
+        rank_col,
+        (F.row_number().over(w) + _pid_offsets(before, LongType())).cast("bigint"),
     ).drop("__pid")
-    out._aas_rank_source = p  # cache handle for the owning caller
-    # total row count is already known from the offsets collect — callers
-    # needing it (tercile/quota arithmetic) can read it instead of paying
-    # a whole count() job over the same cache
-    out._aas_rank_total = off
+    out._aas_rank_total = total
     return out
 
 
@@ -724,46 +710,21 @@ def global_running_min(
     out_col: str = "running_min_before",
 ) -> DataFrame:
     """EXCLUSIVE global running minimum of ``value_col`` in ``order_cols``
-    order (NULL for the first row), distributed like
-    :func:`global_value_rank`: range-repartition, per-partition local
-    running min, then fold in the broadcast minima of all EARLIER
-    partitions — no single-task global window.  The primitive under
-    skyline/Pareto sweeps and "best seen so far" scans at 100 TB.
-    Cache ownership: as in :func:`global_value_rank`, the returned plan
-    depends on the persisted range-partitioned input — the caller owns
-    (and eventually releases) that cache."""
-    cols = [F.col(c) for c in order_cols]
-    p = (
-        df.repartitionByRange(*cols)
-        .withColumn("__pid", F.spark_partition_id())
-        .persist()
-    )
-    mins = sorted(
-        p.groupBy("__pid").agg(F.min(value_col).alias("__m")).collect(),
-        key=lambda r: r["__pid"],
-    )
-    prefix: dict[int, int | None] = {}
-    best = None
-    for r in mins:
-        prefix[r["__pid"]] = best
-        v = r["__m"]
-        best = v if best is None else min(best, v)
-    pairs = []
-    for pid, pre in prefix.items():
-        pairs += [F.lit(pid), F.lit(pre)]
-    pmap = (
-        F.create_map(*pairs)
-        if pairs
-        else F.map_from_arrays(
-            F.array().cast("array<int>"), F.array().cast("array<bigint>")
-        )
-    )
-    w = Window.partitionBy("__pid").orderBy(*cols).rowsBetween(
+    order (NULL before the first non-NULL value; NULLs are skipped, as
+    ``min`` skips them): a :func:`_range_scan` taking each range's
+    minimum, the local running min folded with the minima of all EARLIER
+    ranges — no single-task global window.  The primitive under
+    skyline/Pareto sweeps and "best seen so far" scans at 100 TB."""
+    p, mins = _range_scan(df, order_cols, F.min(value_col))
+    before, _ = _exclusive_fold(mins, min)
+    # integral values widen to bigint, as the rank and sum columns do
+    dtype = df.schema[value_col].dataType
+    dtype = LongType() if isinstance(dtype, IntegralType) else dtype
+    w = Window.partitionBy("__pid").orderBy(*order_cols).rowsBetween(
         Window.unboundedPreceding, -1
     )
-    local = F.min(value_col).over(w)
     return p.withColumn(
-        out_col, F.least(local, pmap[F.col("__pid")])
+        out_col, F.least(F.min(value_col).over(w), _pid_offsets(before, dtype))
     ).drop("__pid")
 
 
@@ -774,62 +735,35 @@ def global_running_sum(
     out_col: str = "running_sum",
 ) -> DataFrame:
     """INCLUSIVE global running sum of ``value_col`` in ``order_cols``
-    order, distributed like :func:`global_value_rank`: range-repartition,
-    per-partition local cumsum, add the broadcast totals of all EARLIER
-    partitions.  The sweep-line primitive (interval concurrency, token
-    budgets, gap accounting) with no single-task window.
-    Cache ownership: as in :func:`global_value_rank`, the returned plan
-    depends on the persisted range-partitioned input — the caller owns
-    (and eventually releases) that cache."""
-    cols = [F.col(c) for c in order_cols]
-    p = (
-        df.repartitionByRange(*cols)
-        .withColumn("__pid", F.spark_partition_id())
-        .persist()
-    )
-    totals = sorted(
-        p.groupBy("__pid").agg(F.sum(value_col).alias("__s")).collect(),
-        key=lambda r: r["__pid"],
-    )
-    acc, pairs = 0, []
-    for r in totals:
-        pairs += [F.lit(r["__pid"]), F.lit(acc)]
-        acc += int(r["__s"] or 0)
-    pmap = (
-        F.create_map(*pairs)
-        if pairs
-        else F.map_from_arrays(
-            F.array().cast("array<int>"), F.array().cast("array<bigint>")
-        )
-    )
-    w = Window.partitionBy("__pid").orderBy(*cols).rowsBetween(
+    order (NULLs are skipped, as ``sum`` skips them; NULL before the first
+    non-NULL value): a :func:`_range_scan` taking each range's total, the
+    local cumsum plus the totals of all EARLIER ranges.  The sweep-line
+    primitive (interval concurrency, token budgets, gap accounting) with
+    no single-task window."""
+    p, sums = _range_scan(df, order_cols, F.sum(value_col))
+    before, _ = _exclusive_fold(sums, operator.add)
+    w = Window.partitionBy("__pid").orderBy(*order_cols).rowsBetween(
         Window.unboundedPreceding, 0
     )
+    local, off = F.sum(value_col).over(w), _pid_offsets(before, LongType())
     return p.withColumn(
-        out_col,
-        (F.sum(value_col).over(w) + pmap[F.col("__pid")]).cast("bigint"),
+        out_col, F.coalesce(local + off, local, off).cast("bigint")
     ).drop("__pid")
 
 
 def global_sequence_gaps(df: DataFrame, key_col: str) -> DataFrame:
-    """Holes in an integer key sequence, computed DISTRIBUTED: the
-    distinct keys range-repartition, each partition finds its internal
-    gaps with a local lead window, and the cross-partition seams are
-    repaired from the per-partition (min, max) boundary table (one tiny
-    collect — #partitions rows).  Returns (gap_start, gap_end, gap_len).
+    """Holes in an integer key sequence, computed DISTRIBUTED: a
+    :func:`_range_scan` over the distinct keys, each range finding its
+    internal gaps with a local lead window, and the seams between ranges
+    repaired from the per-range (min, max) table (#ranges rows).  NULL
+    keys are not part of the sequence.  Returns (gap_start, gap_end,
+    gap_len).
 
     The single-window formulation (``lead() OVER (ORDER BY k)``) funnels
-    every key through one task; this never does — the
-    :func:`global_value_rank` discipline applied to gap detection.
-    Cache ownership: the returned plan depends on the persisted
-    range-partitioned key table (boundaries are sample-derived); the
-    caller owns that cache."""
-    p = (
-        df.select(F.col(key_col).cast("long").alias("k"))
-        .distinct()
-        .repartitionByRange(F.col("k"))
-        .withColumn("__pid", F.spark_partition_id())
-        .persist()
+    every key through one task; this never does."""
+    keys = df.select(F.col(key_col).cast("long").alias("k")).distinct()
+    p, bounds = _range_scan(
+        keys, ["k"], F.struct(F.min("k").alias("lo"), F.max("k").alias("hi"))
     )
     w = Window.partitionBy("__pid").orderBy("k")
     local = (
@@ -840,16 +774,13 @@ def global_sequence_gaps(df: DataFrame, key_col: str) -> DataFrame:
             (F.col("__nxt") - 1).alias("gap_end"),
         )
     )
-    bounds = sorted(
-        p.groupBy("__pid").agg(F.min("k").alias("lo"), F.max("k").alias("hi")).collect(),
-        key=lambda r: r["__pid"],
-    )
-    seams = []
-    for prev, cur in zip(bounds, bounds[1:]):
-        if cur["lo"] - prev["hi"] > 1:
-            seams.append((prev["hi"] + 1, cur["lo"] - 1))
-    spark = df.sparkSession
-    seam_df = spark.createDataFrame(seams, "gap_start long, gap_end long")
+    edges = [b for _, b in bounds if b["lo"] is not None]
+    seams = [
+        (prev["hi"] + 1, cur["lo"] - 1)
+        for prev, cur in zip(edges, edges[1:])
+        if cur["lo"] - prev["hi"] > 1
+    ]
+    seam_df = df.sparkSession.createDataFrame(seams, "gap_start long, gap_end long")
     return local.unionByName(seam_df).select(
         "gap_start",
         "gap_end",
@@ -921,14 +852,8 @@ def grid_interpolate(
     # explode below multiplies rows AFTER the exchange — byte costing
     # under-provisions the heavy stage.  A user repartition is
     # coalesce-exempt and IS the window's required partitioning (no extra
-    # exchange); identity fallback when the guard cannot be evaluated
-    # (Spark Connect: no sparkContext).
-    from apache_arrow_spark.session import compute_parallelism
-
-    try:
-        obs = obs.repartition(compute_parallelism(df.sparkSession), F.col("__k"))
-    except (ImportError, AttributeError):
-        pass
+    # exchange).
+    obs = obs.repartition(compute_parallelism(df.sparkSession), F.col("__k"))
     w = Window.partitionBy("__k").orderBy("__t")
     p = obs.withColumn("__tn", F.lead("__t").over(w)).withColumn(
         "__vn", F.lead("__v").over(w)

@@ -16,6 +16,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from apache_arrow_spark.session import compute_parallelism
+
 
 def asof_join(
     left: DataFrame,
@@ -68,19 +70,8 @@ def asof_join(
     # serializes the per-key sort + carry of the fact-scale union
     # (measured: a 1.1 s 2-task window stage in q152's profile).  A user
     # repartition is coalesce-exempt and IS the window's required hash
-    # partitioning, so it adds no exchange; when the parallelism guard
-    # cannot be evaluated (Spark Connect) the safe fallback is identity.
-    try:
-        from apache_arrow_spark.session import compute_parallelism
-
-        unioned = unioned.repartition(
-            compute_parallelism(left.sparkSession), F.col("__k")
-        )
-    except (ImportError, AttributeError):
-        # only the expected Spark Connect gap (no sparkContext on the
-        # session) falls back to the AQE-coalesced plan; any other error
-        # here is a real bug and must surface (r10 ADVICE)
-        pass
+    # partitioning, so it adds no exchange.
+    unioned = unioned.repartition(compute_parallelism(left.sparkSession), F.col("__k"))
 
     # right rows sort before left rows at equal time -> inclusive (<=) match
     w = (

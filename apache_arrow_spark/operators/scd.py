@@ -13,6 +13,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from apache_arrow_spark.session import compute_parallelism
+
 
 def scd2_intervals(
     changes: DataFrame,
@@ -30,19 +32,10 @@ def scd2_intervals(
     # discipline): AQE byte-costs the window's exchange and coalesces it
     # to ~2 tasks at bench scale, serializing the per-key sort of the
     # whole changelog; a user repartition is coalesce-exempt and IS the
-    # window's required partitioning (no extra exchange).  Identity
-    # fallback when the guard can't be evaluated (Spark Connect).
-    try:
-        from apache_arrow_spark.session import compute_parallelism
-
-        changes = changes.repartition(
-            compute_parallelism(changes.sparkSession), F.col(key_col)
-        )
-    except (ImportError, AttributeError):
-        # only the expected Spark Connect gap (no sparkContext on the
-        # session) falls back to the AQE-coalesced plan; any other error
-        # here is a real bug and must surface (r10 ADVICE)
-        pass
+    # window's required partitioning (no extra exchange).
+    changes = changes.repartition(
+        compute_parallelism(changes.sparkSession), F.col(key_col)
+    )
     from_col = F.col(order_cols[0])
     to_col = F.lead(order_cols[0]).over(w)
     return (

@@ -1820,7 +1820,7 @@ def q65_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut into 512-token bins (docs may straddle a boundary; bin_offset says
     where each starts).  The global running sum is a distributed prefix
     sum — partition-local window cumsum + broadcast partition offsets —
-    never a single-task ORDER BY window (pipeline._exclusive_prefix_sum)."""
+    never a single-task ORDER BY window (pipeline.global_running_sum)."""
     from apache_arrow_spark.functions.pipeline import pack_sequences
 
     d = load_table(spark, sf_dir, "documents")
@@ -4720,7 +4720,7 @@ def q133_quantile_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"cast(1 + if(rnk <= {head}, (rnk - 1) div {tile_q + 1}, "
             f"{rem} + (rnk - 1 - {head}) div {tile_q}) as int)"
         )
-    out = (
+    return (
         ranked.select("o_totalprice", decile.alias("decile"))
         .groupBy("decile")
         .agg(
@@ -4730,10 +4730,6 @@ def q133_quantile_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("o_totalprice").cast("decimal(18,4)").cast("double").alias("hi"),
         )
     )
-    # 10-row result: checkpoint eagerly, then release the rank cache
-    out = out.localCheckpoint(eager=True)
-    ranked._aas_rank_source.unpersist()
-    return out
 
 
 @register(

@@ -151,14 +151,22 @@ def spread_compute(df: DataFrame, *key_cols: str) -> DataFrame:
 
 
 def truncate(df: DataFrame) -> DataFrame:
-    """THE lineage cut for iterative operators: materialize ``df`` and
-    return a twin rooted at its rows (release with ``free_local_checkpoint``).
-    Without a cut, Catalyst re-analysis grows with loop depth.  With a
-    checkpoint directory set (``setCheckpointDir``, a deployment setting)
-    the rows go to reliable ``checkpoint()`` files, which can be read again
-    after an executor is lost.  Otherwise — also without a ``sparkContext``
-    (Spark Connect) — ``localCheckpoint`` keeps them as executor blocks,
-    which cannot be recomputed once lost: the job then fails loudly."""
+    """THE lineage cut: materialize ``df`` and return a twin rooted at its
+    rows (release with ``free_local_checkpoint``).  Two caller classes:
+    - iterative operators (connected components, PageRank, BFS, BPE
+      training, ``curate_corpus``), where without a cut Catalyst
+      re-analysis grows with loop depth;
+    - range scans (``pipeline._range_scan``, under the global rank,
+      running min/sum, sequence gaps and packing), where the cut pins the
+      sample-drawn range boundaries that the collected per-range offsets
+      were computed against.
+    With a checkpoint directory set (``setCheckpointDir``, a deployment
+    setting) the rows go to reliable ``checkpoint()`` files, which can be
+    read again after an executor is lost, so the result recomputes
+    exactly.  Otherwise — also without a ``sparkContext`` (Spark
+    Connect) — ``localCheckpoint`` keeps them as executor blocks, which
+    cannot be recomputed once lost: the job then fails loudly (for a
+    range scan too, where a plain ``persist()`` would have re-sampled)."""
     try:
         reliable = df.sparkSession.sparkContext.getCheckpointDir() is not None
     except Exception as e:

@@ -26,8 +26,10 @@ racy; the loop makes the window wide enough that drops land
 mid-iteration in practice (verified by the drop counter).
 
 A block-release fence rides along: an iterative call leaves only the
-blocks of the frame it returns, and the lazy LM / retrieval operators
-leave none.
+blocks of the frame it returns, the lazy LM / retrieval operators leave
+none, and the queries over the global range scans
+(``pipeline._range_scan``, also cut with ``session.truncate``) leave
+nothing in Spark's CacheManager.
 """
 
 import threading
@@ -230,3 +232,40 @@ def test_lazy_operator_queries_leave_no_cached_blocks(spark, sf_dir, name):
         before = _persistent_ids(spark)
         assert QUERIES[name](spark, sf_dir).collect()
         assert _persistent_ids(spark) - before == set()
+
+
+RANGE_SCAN_QUERIES = [
+    "q65_pack_sequences",
+    "q133_quantile_binning",
+    "q188_rank_blend_selection",
+    "q195_sequence_gaps",
+    "q205_perplexity_strata",
+    "q238_pareto_frontier",
+    "q241_peak_concurrency",
+    "q288_quality_budget_cutoff",
+]
+
+
+@pytest.mark.parametrize("name", RANGE_SCAN_QUERIES)
+def test_range_scan_queries_leave_cache_manager_empty(spark, sf_dir, name):
+    from apache_arrow_spark.queries import QUERIES
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()  # frames other tests cached are not ours
+    for _ in range(2):  # no clearCache() between the calls
+        assert QUERIES[name](spark, sf_dir).collect()
+        assert cache.isEmpty(), f"{name} left a persisted frame registered"
+
+
+@pytest.mark.parametrize("n_rows", [200, 300])
+def test_range_scan_splits_small_inputs(spark, n_rows):
+    """The pipeline tests' 200- and 300-row frames must span several
+    ranges, or they never exercise the cross-range offsets."""
+    from apache_arrow_spark.functions.pipeline import _range_scan
+
+    df = spark.createDataFrame(
+        [(i, (i * 37) % 50) for i in range(n_rows)], "id long, k long"
+    )
+    _, counts = _range_scan(df, ["k", "id"], F.count(F.lit(1)))
+    assert len(counts) > 1
+    assert sum(c for _, c in counts) == n_rows

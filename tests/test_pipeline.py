@@ -248,14 +248,32 @@ def test_q133_decile_matches_ntile_with_remainder(spark):
             for r in df.select("id", F.ntile(10).over(w).alias("d")).collect()
         }
         assert got == want, f"N={n}"
-        ranked._aas_rank_source.unpersist()
 
 
-def test_global_value_rank_empty(spark):
-    from apache_arrow_spark.functions.pipeline import global_value_rank
+@pytest.mark.parametrize(
+    "primitive",
+    [
+        "global_value_rank",
+        "global_running_min",
+        "global_running_sum",
+        "global_sequence_gaps",
+        "pack_sequences",
+    ],
+)
+def test_global_value_rank_empty(spark, primitive):
+    """No rows means no ranges: every range-scan primitive must still
+    analyze (typed empty offset map) and return zero rows."""
+    from apache_arrow_spark.functions import pipeline as P
 
-    empty = spark.createDataFrame([], "id long, v long")
-    assert global_value_rank(empty, ["v", "id"]).count() == 0
+    empty = spark.createDataFrame([], "doc_id long, v long, text string")
+    call = {
+        "global_value_rank": lambda: P.global_value_rank(empty, ["v", "doc_id"]),
+        "global_running_min": lambda: P.global_running_min(empty, ["doc_id"], "v"),
+        "global_running_sum": lambda: P.global_running_sum(empty, ["doc_id"], "v"),
+        "global_sequence_gaps": lambda: P.global_sequence_gaps(empty, "v"),
+        "pack_sequences": lambda: P.pack_sequences(empty, 16),
+    }[primitive]
+    assert call().collect() == []
 
 
 def test_greedy_coverage_select_reference(spark):
@@ -281,20 +299,26 @@ def test_global_running_min_matches_single_window(spark):
 
     from apache_arrow_spark.functions.pipeline import global_running_min
 
-    df = spark.createDataFrame(
-        [(i, (i * 37) % 50, (i * 13) % 20) for i in range(300)],
-        "id long, k long, v long",
-    )
-    got = {
-        r["id"]: r["running_min_before"]
-        for r in global_running_min(df, ["k", "id"], "v").collect()
-    }
+    def v(i):
+        # NULL-valued: scattered NULLs (one leads the order), and every
+        # row with k >= 25 — whole later ranges hold only NULLs
+        return None if i % 4 == 0 or (i * 37) % 50 >= 25 else (i * 13) % 20
+
     w = Window.orderBy("k", "id").rowsBetween(Window.unboundedPreceding, -1)
-    want = {
-        r["id"]: r["m"]
-        for r in df.withColumn("m", F.min("v").over(w)).collect()
-    }
-    assert got == want
+    for rows in (
+        [(i, (i * 37) % 50, (i * 13) % 20) for i in range(300)],
+        [(i, (i * 37) % 50, v(i)) for i in range(300)],
+    ):
+        df = spark.createDataFrame(rows, "id long, k long, v long")
+        got = {
+            r["id"]: r["running_min_before"]
+            for r in global_running_min(df, ["k", "id"], "v").collect()
+        }
+        want = {
+            r["id"]: r["m"]
+            for r in df.withColumn("m", F.min("v").over(w)).collect()
+        }
+        assert got == want
 
 
 def test_global_running_sum_matches_single_window(spark):
@@ -303,20 +327,23 @@ def test_global_running_sum_matches_single_window(spark):
 
     from apache_arrow_spark.functions.pipeline import global_running_sum
 
-    df = spark.createDataFrame(
-        [(i, (i * 7) % 23, 1 if i % 3 else -1) for i in range(200)],
-        "id long, k long, delta long",
-    )
-    got = {
-        r["id"]: r["running_sum"]
-        for r in global_running_sum(df, ["k", "id"], "delta").collect()
-    }
     w = Window.orderBy("k", "id").rowsBetween(Window.unboundedPreceding, 0)
-    want = {
-        r["id"]: r["s"]
-        for r in df.withColumn("s", F.sum("delta").over(w)).collect()
-    }
-    assert got == want
+    for rows in (
+        [(i, (i * 7) % 23, 1 if i % 3 else -1) for i in range(200)],
+        # NULL-valued: every other value NULL (so some ranges start on a NULL),
+        # and the leading rows all NULL (so early ranges sum to NULL)
+        [(i, i, None if i % 2 == 0 or i < 120 else 1) for i in range(400)],
+    ):
+        df = spark.createDataFrame(rows, "id long, k long, delta long")
+        got = {
+            r["id"]: r["running_sum"]
+            for r in global_running_sum(df, ["k", "id"], "delta").collect()
+        }
+        want = {
+            r["id"]: r["s"]
+            for r in df.withColumn("s", F.sum("delta").over(w)).collect()
+        }
+        assert got == want
 
 
 def test_global_sequence_gaps_matches_single_window(spark):

@@ -611,6 +611,8 @@ def test_q205_no_global_window(spark, sf_dir):
     # partition spec)
     for m in re.finditer(r"partitionBy=\[\]", p):
         raise AssertionError(f"global window found: {p[m.start()-200:m.end()]}")
+    # ...and the rank is the range scan's Window partitioned by __pid
+    assert re.search(r"\], \[__pid#\d+\], \[", p), "no range-scan Window"
 
 
 def test_q206_cluster_sizes_broadcast(spark, sf_dir):
