@@ -11,8 +11,8 @@ header + 40-byte BITMAPINFOHEADER, BGR bottom-up rows padded to 4 bytes)
 and PPM (Netpbm P6 binary, RGB top-down) — so ``decode_image`` runs for
 real on those payloads.  Compressed formats (JPEG/PNG) still need codec
 libraries absent from this container and raise ``NotImplementedError``;
-``fake=True`` keeps the deterministic byte-histogram stand-in for
-synthetic payloads.
+rows tagged ``media_type = "image/fake"`` (``attach_fake_media``) keep the
+deterministic byte-histogram stand-in for synthetic payloads.
 """
 
 from __future__ import annotations
@@ -159,14 +159,19 @@ def decode_image(payload: bytes, fake: bool = False) -> list[float]:
     return (counts / total).tolist()
 
 
-def extract_features(media_df: DataFrame, fake: bool = True) -> DataFrame:
+def extract_features(media_df: DataFrame) -> DataFrame:
     """Batch feature extraction over mapInPandas: (doc_id, features
-    array<double>, n_bytes).  Arrow-batched; executors see pandas frames of
+    array<double>, n_bytes).  Rows whose ``media_type`` is ``image/fake``
+    (``attach_fake_media``) histogram the payload bytes, every other row
+    decodes its pixels.  Arrow-batched; executors see pandas frames of
     whole partitions, the decode loop never crosses the JVM boundary."""
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            feats = pdf["payload"].map(lambda p: decode_image(bytes(p), fake=fake))
+            feats = [
+                decode_image(bytes(p), t == "image/fake")
+                for p, t in zip(pdf["payload"], pdf["media_type"])
+            ]
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],

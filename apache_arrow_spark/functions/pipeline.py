@@ -737,18 +737,23 @@ def global_running_sum(
     """INCLUSIVE global running sum of ``value_col`` in ``order_cols``
     order (NULLs are skipped, as ``sum`` skips them; NULL before the first
     non-NULL value): a :func:`_range_scan` taking each range's total, the
-    local cumsum plus the totals of all EARLIER ranges.  The sweep-line
-    primitive (interval concurrency, token budgets, gap accounting) with
-    no single-task window."""
+    local cumsum plus the totals of all EARLIER ranges.  The grand total
+    is already known from the range totals; callers needing it (token
+    budgets) read ``out._aas_sum_total`` (None when every value is NULL)
+    instead of paying a second aggregate pass.
+    The sweep-line primitive (interval concurrency, token budgets, gap
+    accounting) with no single-task window."""
     p, sums = _range_scan(df, order_cols, F.sum(value_col))
-    before, _ = _exclusive_fold(sums, operator.add)
+    before, total = _exclusive_fold(sums, operator.add)
     w = Window.partitionBy("__pid").orderBy(*order_cols).rowsBetween(
         Window.unboundedPreceding, 0
     )
     local, off = F.sum(value_col).over(w), _pid_offsets(before, LongType())
-    return p.withColumn(
+    out = p.withColumn(
         out_col, F.coalesce(local + off, local, off).cast("bigint")
     ).drop("__pid")
+    out._aas_sum_total = total
+    return out
 
 
 def global_sequence_gaps(df: DataFrame, key_col: str) -> DataFrame:

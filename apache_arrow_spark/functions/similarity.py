@@ -1,28 +1,47 @@
 """Similarity search over embedding columns (array<float>).
 
-- brute-force cosine top-k: exact baseline.  Dot products via
-  ``F.zip_with`` + ``F.aggregate`` — codegen'd, no UDF, linear scan that
-  parallelizes perfectly (each partition scores its rows, TakeOrdered
-  merges top-k).
-- sign-LSH (random hyperplanes): the scale path.  A d x p hyperplane
-  matrix (seeded, deterministic) turns each vector into a p-bit bucket id;
-  candidates = same bucket (or Hamming-adjacent probes), then exact rerank.
-  At 100 TB the bucket id is computed at ingest and bucketed/partitioned-by,
-  so a query touches one bucket's partitions, not the corpus.
+Every search here is a PROBE that picks candidates followed by ONE exact
+verify step (the filter-then-verify shape):
+
+- top-k against one query vector: the probe is a filter on a bucket or
+  cell id (or none at all), and :func:`cosine_topk` is the only rerank.
+  Dot products via ``F.zip_with`` + ``F.aggregate`` (no UDF);
+  ``orderBy`` + ``limit`` compiles to TakeOrdered (each partition scores
+  its rows, a heap merges the top-k), so there is no global sort.
+- batch kNN joins (every query row against a corpus): the probe is a
+  cross join, a bucket equi-join or a cell equi-join, and
+  :func:`_rank_neighbours` is the only per-query rank.
+- the probes: sign-LSH (random hyperplanes; a d x p seeded matrix turns
+  each vector into a p-bit bucket id, and the probe set is every bucket
+  within ``n_probe_bits`` Hamming distance, :func:`_probe_masks`) and IVF
+  (nearest centroids by squared L2, :func:`_sq_l2`).  At 100 TB the bucket
+  or cell id is computed at ingest and bucketed/partitioned-by, so a
+  query touches one bucket's partitions, not the corpus.
 - embedding near-dup pairs: same LSH buckets self-joined, cosine verified.
 """
 
 from __future__ import annotations
 
-import math
 import random
+from itertools import combinations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
+
+from apache_arrow_spark.log import warn_once
+from apache_arrow_spark.session import _scoped_conf, spread_compute
 
 
 def _as_double(vec: Column) -> Column:
     return F.transform(vec, lambda x: x.cast("double"))
+
+
+def _vec_dim(df: DataFrame, vec_col: str) -> int:
+    """Vector dimension read from the first row (one job); 0 when ``df``
+    is empty — the hyperplanes then have no components, and the empty
+    side yields no rows downstream."""
+    first = df.select(F.size(F.col(vec_col)).alias("d")).first()
+    return first["d"] if first else 0
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -41,6 +60,20 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+def _sq_l2(v: Column, c: list[float]) -> Column:
+    """Squared L2 distance of a double-array column to a literal vector
+    (sequential left fold, as :func:`cosine`)."""
+    return F.aggregate(
+        F.zip_with(
+            v,
+            F.array(*[F.lit(float(x)) for x in c]),
+            lambda x, y: (x - y) * (x - y),
+        ),
+        F.lit(0.0),
+        lambda acc, t: acc + t,
+    )
+
+
 def cosine_topk(
     df: DataFrame,
     query_vec: list[float],
@@ -49,15 +82,39 @@ def cosine_topk(
     id_col: str = "vec_id",
     ndigits: int = 6,
 ) -> DataFrame:
-    """Exact top-k by cosine to a literal query vector.  orderBy+limit
-    compiles to TakeOrdered (per-partition heap + driver merge) — no global
-    sort shuffle."""
+    """Exact top-k by cosine to a literal query vector — the rerank under
+    every top-k search here (a probe filters ``df`` first).  orderBy+limit
+    compiles to TakeOrdered (per-partition heap + driver merge) — no
+    global sort shuffle."""
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     sim = F.round(cosine(_as_double(F.col(vec_col)), q), ndigits)
     return (
         df.select(F.col(id_col), sim.alias("sim"))
         .orderBy(F.col("sim").desc(), F.col(id_col))
         .limit(k)
+    )
+
+
+def _vectors(df: DataFrame, side: str, id_col: str, vec_col: str, *extra: Column) -> DataFrame:
+    """One side of a kNN join: ``{side}_id``, the double vector
+    ``{side}v``, then ``extra``."""
+    return df.select(
+        F.col(id_col).alias(f"{side}_id"), _as_double(F.col(vec_col)).alias(f"{side}v"), *extra
+    )
+
+
+def _rank_neighbours(pairs: DataFrame, k: int, ndigits: int) -> DataFrame:
+    """Candidate pairs ``(q_id, qv, n_id, nv)`` (double vectors) -> each
+    query's top-k neighbours ``(q_id, n_id, rank, sim)`` by exact rounded
+    cosine, ties to the lower ``n_id``; a query is never its own
+    neighbour.  The per-query rerank under every kNN join here."""
+    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("n_id"))
+    return (
+        pairs.filter(F.col("q_id") != F.col("n_id"))
+        .withColumn("sim", F.round(cosine(F.col("qv"), F.col("nv")), ndigits))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("q_id", "n_id", "rank", "sim")
     )
 
 
@@ -79,21 +136,26 @@ def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
     return acc
 
 
+def _probe_masks(planes: int, n_probe_bits: int) -> list[int]:
+    """XOR masks of every bit pattern with at most ``n_probe_bits`` of
+    ``planes`` bits set: ``bucket ^ mask`` walks every bucket within that
+    Hamming distance, the bucket itself first (mask 0)."""
+    return [
+        sum(1 << j for j in bits)
+        for r in range(n_probe_bits + 1)
+        for bits in combinations(range(planes), r)
+    ]
+
+
 def lsh_probes(query_vec: list[float], hp: list[list[float]], n_probe_bits: int = 1) -> set[int]:
     """Multi-probe bucket set for a query: its own bucket plus all buckets
     within ``n_probe_bits`` Hamming distance."""
-    planes = len(hp)
     qb = 0
     for j, plane in enumerate(hp):
         s = sum(float(a) * float(b) for a, b in zip(query_vec, plane))
         if s >= 0:
             qb |= 1 << j
-    probes = {qb}
-    if n_probe_bits >= 1:
-        probes |= {qb ^ (1 << j) for j in range(planes)}
-    if n_probe_bits >= 2:
-        probes |= {qb ^ (1 << i) ^ (1 << j) for i in range(planes) for j in range(i + 1, planes)}
-    return probes
+    return {qb ^ m for m in _probe_masks(len(hp), n_probe_bits)}
 
 
 def ann_topk_lsh(
@@ -110,18 +172,12 @@ def ann_topk_lsh(
     """Approximate top-k: score only vectors whose LSH bucket is within
     ``n_probe_bits`` Hamming distance of the query's bucket (multi-probe).
     Candidate filter is a broadcast-friendly IN over bucket ids."""
-    dim = len(query_vec)
-    hp = hyperplanes(dim, planes, seed)
+    hp = hyperplanes(len(query_vec), planes, seed)
     bucketed = df.withColumn("__bucket", lsh_bucket(F.col(vec_col), hp))
     probes = lsh_probes(query_vec, hp, n_probe_bits)
-
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    sim = F.round(cosine(_as_double(F.col(vec_col)), q), ndigits)
-    return (
-        bucketed.filter(F.col("__bucket").isin(*[int(p) for p in probes]))
-        .select(F.col(id_col), sim.alias("sim"))
-        .orderBy(F.col("sim").desc(), F.col(id_col))
-        .limit(k)
+    return cosine_topk(
+        bucketed.filter(F.col("__bucket").isin(*probes)),
+        query_vec, k, vec_col, id_col, ndigits,
     )
 
 
@@ -141,7 +197,7 @@ def ivf_assign(
     table by ``__cluster`` so probes touch only matching partitions.
     """
     from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
+    from pyspark.ml.functions import array_to_vector
 
     feats = df.withColumn("__features", array_to_vector(_as_double(F.col(vec_col))))
     train = feats.sample(fraction=sample_fraction, seed=seed) if sample_fraction else feats
@@ -170,27 +226,28 @@ def assign_to_centroids(df: DataFrame, centroids: list[list[float]], vec_col: st
     single-task stage at sf0.1; let-bound it is one evaluation each,
     argmin = array_position over k doubles, same first-index
     tie-break)."""
-    from apache_arrow_spark.session import spread_compute
-
-    df = spread_compute(df)
     v = _as_double(F.col(vec_col))
-    dists = [
-        F.aggregate(
-            F.zip_with(
-                v,
-                F.array(*[F.lit(float(x)) for x in c]),
-                lambda x, y: (x - y) * (x - y),
-            ),
-            F.lit(0.0),
-            lambda acc, t: acc + t,
-        )
-        for c in centroids
-    ]
-    bound = df.withColumn("__dists", F.array(*dists))
+    bound = spread_compute(df).withColumn(
+        "__dists", F.array(*[_sq_l2(v, c) for c in centroids])
+    )
     assign = (
         F.array_position(F.col("__dists"), F.array_min(F.col("__dists"))) - 1
     ).cast("int")
     return bound.withColumn("__cluster", assign).drop("__dists")
+
+
+def _nearest_cells(
+    centroids: list[list[float]], query_vec: list[float], n_probe: int
+) -> list[int]:
+    """The ``n_probe`` centroid indices nearest to the query by squared
+    L2, nearest first (a stable sort: ties to the lower index)."""
+    order = sorted(
+        range(len(centroids)),
+        key=lambda i: sum(
+            ((a - b) * (a - b) for a, b in zip(centroids[i], query_vec)), 0.0
+        ),
+    )
+    return order[:n_probe]
 
 
 def ivf_topk(
@@ -217,20 +274,10 @@ def ivf_topk(
         assigned, centroids = ivf_assign(df, n_clusters, vec_col, seed)
     else:
         assigned = assign_to_centroids(df, centroids, vec_col)
-    dists = sorted(
-        range(len(centroids)),
-        key=lambda i: sum(
-            ((a - b) * (a - b) for a, b in zip(centroids[i], query_vec)), 0.0
-        ),
-    )
-    probe = dists[:n_probe]
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    sim = F.round(cosine(_as_double(F.col(vec_col)), q), ndigits)
-    return (
-        assigned.filter(F.col("__cluster").isin(probe))
-        .select(F.col(id_col), sim.alias("sim"))
-        .orderBy(F.col("sim").desc(), F.col(id_col))
-        .limit(k)
+    probe = _nearest_cells(centroids, query_vec, n_probe)
+    return cosine_topk(
+        assigned.filter(F.col("__cluster").isin(probe)),
+        query_vec, k, vec_col, id_col, ndigits,
     )
 
 
@@ -256,9 +303,7 @@ def materialize_lsh_index(
     id.  `bucketBy(__bucket)` hashes the id into ``n_buckets`` files per
     partition; an equality/IN probe on `__bucket` then prunes buckets at
     plan time (`SelectedBucketsCount` in the scan)."""
-    first = df.select(F.size(F.col(vec_col)).alias("d")).first()
-    dim = first["d"] if first else 0
-    hp = hyperplanes(dim, planes, seed)
+    hp = hyperplanes(_vec_dim(df, vec_col), planes, seed)
     (
         df.withColumn("__bucket", lsh_bucket(F.col(vec_col), hp))
         .write.bucketBy(n_buckets, "__bucket")
@@ -288,49 +333,29 @@ def ann_topk_lsh_indexed(
     Disables `autoBucketedScan` around the probe: that heuristic turns
     off bucketed reading for scan-only plans, which also turns off bucket
     pruning — for probe workloads pruning is the whole point.  The conf
-    is scoped, not leaked (the r6 q292 lesson: conf drift is how
-    order-dependent failures are made): physical planning is FORCED
+    is scoped (``session._scoped_conf``), and physical planning is FORCED
     inside the scope — QueryExecution caches its executedPlan, so the
-    returned lazy DataFrame keeps the bucket-pruned scan while the
-    session conf is restored unconditionally before return."""
+    returned lazy DataFrame keeps the bucket-pruned scan after the
+    session conf is restored."""
+    hp = hyperplanes(len(query_vec), planes, seed)
+    probes = lsh_probes(query_vec, hp, n_probe_bits)
     key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    old = spark.conf.get(key, None)
-    try:
-        spark.conf.set(key, "false")
-        dim = len(query_vec)
-        hp = hyperplanes(dim, planes, seed)
-        probes = lsh_probes(query_vec, hp, n_probe_bits)
-        q = F.array(*[F.lit(float(x)) for x in query_vec])
-        sim = F.round(cosine(_as_double(F.col(vec_col)), q), ndigits)
-        out = (
-            spark.table(table_name)
-            .filter(F.col("__bucket").isin(*[int(p) for p in probes]))
-            .select(F.col(id_col), sim.alias("sim"))
-            .orderBy(F.col("sim").desc(), F.col(id_col))
-            .limit(k)
+    with _scoped_conf(spark, key, "false"):
+        out = cosine_topk(
+            spark.table(table_name).filter(F.col("__bucket").isin(*probes)),
+            query_vec, k, vec_col, id_col, ndigits,
         )
         try:
             out._jdf.queryExecution().executedPlan()  # pin plan under conf
-        except Exception:
-            # Spark Connect: no _jdf, so the plan resolves lazily AFTER the
-            # conf restore below — results stay correct but autoBucketedScan
-            # re-enables and the probe scans every bucket.  Surface it: a
-            # silent 16x scan blow-up is a perf regression nobody would see
-            # (ADVICE r7).
-            import warnings
-
-            warnings.warn(
-                "ann_topk_lsh_indexed: cannot pin the physical plan on this "
-                "session (no _jdf — Spark Connect?); bucket pruning may be "
-                "lost for this probe (results remain correct)",
-                RuntimeWarning,
-                stacklevel=2,
+        except Exception as e:
+            # Spark Connect has no _jdf: the plan resolves lazily AFTER the
+            # restore, so results stay correct but every bucket is scanned
+            warn_once(
+                "lsh_index_pin",
+                "ann_topk_lsh_indexed cannot pin its plan (%s): bucket "
+                "pruning may be lost, results are unchanged",
+                e,
             )
-    finally:
-        if old is not None:
-            spark.conf.set(key, old)
-        else:
-            spark.conf.unset(key)
     return out
 
 
@@ -369,21 +394,10 @@ def ivf_topk_indexed(
     """IVF top-k over a `materialize_ivf_index` directory: probe clusters
     become partition-pruning filters — non-probed clusters' files are
     never opened."""
-    dists = sorted(
-        range(len(centroids)),
-        key=lambda i: sum(
-            ((a - b) * (a - b) for a, b in zip(centroids[i], query_vec)), 0.0
-        ),
-    )
-    probe = [int(i) for i in dists[:n_probe]]
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    sim = F.round(cosine(_as_double(F.col(vec_col)), q), ndigits)
-    return (
-        spark.read.parquet(path)
-        .filter(F.col("__cluster").isin(probe))
-        .select(F.col(id_col), sim.alias("sim"))
-        .orderBy(F.col("sim").desc(), F.col(id_col))
-        .limit(k)
+    probe = _nearest_cells(centroids, query_vec, n_probe)
+    return cosine_topk(
+        spark.read.parquet(path).filter(F.col("__cluster").isin(probe)),
+        query_vec, k, vec_col, id_col, ndigits,
     )
 
 
@@ -397,9 +411,7 @@ def embedding_near_duplicates(
 ) -> DataFrame:
     """Near-duplicate vector pairs (cosine >= threshold) via LSH-bucket
     self-join + exact verify.  Quadratic only within buckets."""
-    first = df.select(F.size(F.col(vec_col)).alias("d")).first()
-    dim = first["d"] if first else 0
-    hp = hyperplanes(dim, planes, seed)
+    hp = hyperplanes(_vec_dim(df, vec_col), planes, seed)
     b = df.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("v"), lsh_bucket(F.col(vec_col), hp).alias("bkt")
     )
@@ -480,28 +492,11 @@ def knn_join_exact(
     should pass False (Spark then picks the build side by size) — but a
     query set that big makes the O(|Q|·|C|) exact join itself the wrong
     tool; use :func:`knn_join_lsh`."""
-    from pyspark.sql import Window
-
-    from apache_arrow_spark.session import spread_compute
-
-    qq = queries.select(
-        F.col(id_col).alias("q_id"), _as_double(F.col(vec_col)).alias("qv")
-    )
+    qq = _vectors(queries, "q", id_col, vec_col)
     if broadcast_queries:
         qq = F.broadcast(qq)
-    cc = spread_compute(corpus).select(
-        F.col(id_col).alias("n_id"), _as_double(F.col(vec_col)).alias("nv")
-    )
-    sim = F.round(cosine(F.col("qv"), F.col("nv")), ndigits)
-    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("n_id"))
-    return (
-        qq.crossJoin(cc)
-        .filter(F.col("q_id") != F.col("n_id"))
-        .withColumn("sim", sim)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "rank", "sim")
-    )
+    cc = _vectors(spread_compute(corpus), "n", id_col, vec_col)
+    return _rank_neighbours(qq.crossJoin(cc), k, ndigits)
 
 
 def knn_join_lsh(
@@ -523,40 +518,14 @@ def knn_join_lsh(
     exact cosine reranks per query.  With a ``materialize_lsh_index``-built
     corpus the bucket column is precomputed and the join prunes storage.
     Returns (q_id, n_id, rank, sim)."""
-    from pyspark.sql import Window
-
-    dim = len(corpus.select(vec_col).first()[0])
-    hp = hyperplanes(dim, planes, seed)
-    cc = corpus.select(
-        F.col(id_col).alias("n_id"),
-        _as_double(F.col(vec_col)).alias("nv"),
-        lsh_bucket(F.col(vec_col), hp).alias("__bucket"),
-    )
-    qb = queries.select(
-        F.col(id_col).alias("q_id"),
-        _as_double(F.col(vec_col)).alias("qv"),
-        lsh_bucket(F.col(vec_col), hp).alias("__b0"),
-    )
-    # multi-probe: own bucket + single-bit flips (n_probe_bits=1)
-    probe_cols = [F.col("__b0")]
-    if n_probe_bits >= 1:
-        probe_cols += [
-            F.col("__b0").bitwiseXOR(F.lit(1 << j)) for j in range(planes)
-        ]
-    qq = qb.select(
-        "q_id", "qv", F.explode(F.array(*probe_cols)).alias("__bucket")
-    )
-    sim = F.round(cosine(F.col("qv"), F.col("nv")), ndigits)
-    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("n_id"))
-    return (
-        qq.join(cc, on="__bucket")
-        .filter(F.col("q_id") != F.col("n_id"))
-        .dropDuplicates(["q_id", "n_id"])
-        .withColumn("sim", sim)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "rank", "sim")
-    )
+    hp = hyperplanes(_vec_dim(corpus, vec_col), planes, seed)
+    bucket = lsh_bucket(F.col(vec_col), hp)
+    cc = _vectors(corpus, "n", id_col, vec_col, bucket.alias("__bucket"))
+    qb = _vectors(queries, "q", id_col, vec_col, bucket.alias("__b0"))
+    probes = [F.col("__b0").bitwiseXOR(F.lit(m)) for m in _probe_masks(planes, n_probe_bits)]
+    qq = qb.select("q_id", "qv", F.explode(F.array(*probes)).alias("__bucket"))
+    pairs = qq.join(cc, on="__bucket").dropDuplicates(["q_id", "n_id"])
+    return _rank_neighbours(pairs, k, ndigits)
 
 
 def random_projection(
@@ -689,16 +658,7 @@ def ann_recall_eval(
     a few hundred queries, the production path stays bucket-pruned).
     """
     exact = knn_join_exact(queries, corpus, k=k, vec_col=vec_col, id_col=id_col)
-    approx = knn_join_lsh(
-        queries,
-        corpus,
-        k=k,
-        planes=planes,
-        vec_col=vec_col,
-        id_col=id_col,
-        n_probe_bits=n_probe_bits,
-        seed=seed,
-    )
+    approx = knn_join_lsh(queries, corpus, k, planes, vec_col, id_col, n_probe_bits, seed)
     return _recall_table(exact, approx)
 
 
@@ -720,39 +680,14 @@ def knn_join_ivf(
     candidate volume is |Q| * n_probe/|C| of the corpus in expectation —
     the IVF twin of :func:`knn_join_lsh`.  Returns (q_id, n_id, rank, sim).
     """
-    from pyspark.sql import Window
-
-    cc = assign_to_centroids(corpus, centroids, vec_col).select(
-        F.col(id_col).alias("n_id"),
-        _as_double(F.col(vec_col)).alias("nv"),
-        F.col("__cluster").alias("__cell"),
-    )
+    assigned = assign_to_centroids(corpus, centroids, vec_col)
+    cc = _vectors(assigned, "n", id_col, vec_col, F.col("__cluster").alias("__cell"))
     qv = _as_double(F.col(vec_col))
-    probe_structs = []
-    for i, c in enumerate(centroids):
-        cl = F.array(*[F.lit(float(x)) for x in c])
-        dist = F.aggregate(
-            F.zip_with(qv, cl, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, t: acc + t,
-        )
-        probe_structs.append(F.struct(dist.alias("d"), F.lit(i).alias("cid")))
-    probes = F.slice(F.array_sort(F.array(*probe_structs)), 1, n_probe)
-    qq = queries.select(
-        F.col(id_col).alias("q_id"),
-        qv.alias("qv"),
-        F.explode(F.transform(probes, lambda s: s.cid)).alias("__cell"),
-    )
-    sim = F.round(cosine(F.col("qv"), F.col("nv")), ndigits)
-    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("n_id"))
-    return (
-        qq.join(cc, on="__cell")
-        .filter(F.col("q_id") != F.col("n_id"))
-        .withColumn("sim", sim)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "rank", "sim")
-    )
+    # (distance, index) structs sort as _nearest_cells does: ties to the lower index
+    cells = [F.struct(_sq_l2(qv, c).alias("d"), F.lit(i).alias("cid")) for i, c in enumerate(centroids)]
+    probes = F.slice(F.array_sort(F.array(*cells)), 1, n_probe)
+    qq = _vectors(queries, "q", id_col, vec_col, F.explode(probes.cid).alias("__cell"))
+    return _rank_neighbours(qq.join(cc, on="__cell"), k, ndigits)
 
 
 def ivf_recall_eval(
@@ -768,15 +703,7 @@ def ivf_recall_eval(
     :func:`ann_recall_eval`, same sampled-query-batch methodology and the
     same exact integer micro-unit recall output."""
     exact = knn_join_exact(queries, corpus, k=k, vec_col=vec_col, id_col=id_col)
-    approx = knn_join_ivf(
-        queries,
-        corpus,
-        centroids,
-        k=k,
-        n_probe=n_probe,
-        vec_col=vec_col,
-        id_col=id_col,
-    )
+    approx = knn_join_ivf(queries, corpus, centroids, k, n_probe, vec_col, id_col)
     return _recall_table(exact, approx)
 
 
@@ -840,12 +767,10 @@ def kmeans_train_exact(
     trained centroids.
 
     Scale shape per round: assignment = broadcast k centroids cross the
-    corpus + a per-vector top-1 window (partitioned by vector id, never
+    corpus + a per-vector argmin aggregate (grouped by vector id, never
     global); update = posexplode to (cluster, dim) cells -> combinable
     sums -> k*dim driver rows (the model).  rounds corpus passes total —
     Lloyd's honest cost."""
-    from pyspark.sql import Window
-
     q = df.select(
         F.col(id_col).alias("vid"),
         F.transform(
@@ -869,13 +794,12 @@ def kmeans_train_exact(
             F.lit(0).cast("bigint"),
             lambda acc, x: acc + x,
         )
-        w = Window.partitionBy("vid").orderBy(F.col("d2").asc(), F.col("cid").asc())
+        # argmin d2 with ties to the lowest cid = min of the (d2, cid) struct
         return (
             q.crossJoin(F.broadcast(cdf))
-            .select("vid", "q", "cid", d2.alias("d2"))
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
+            .groupBy("vid", "q")
+            .agg(F.min(F.struct(d2.alias("d2"), F.col("cid"))).alias("__b"))
+            .select("vid", "q", "__b.cid", "__b.d2")
         )
 
     for _ in range(rounds):

@@ -14,12 +14,12 @@ index preservation and the per-field arrow-type record from ``types``.
 from __future__ import annotations
 
 import json
-from contextlib import contextmanager
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from apache_arrow_spark.session import _scoped_conf
 from apache_arrow_spark.types import ARROW_META_KEY, arrow_to_spark_schema
 
 PANDAS_META_KEY = "pandas"
@@ -28,25 +28,6 @@ INDEX_PREFIX = "__index_level_"
 _BATCH_KEY = "spark.sql.execution.arrow.maxRecordsPerBatch"
 # Arrow caps one buffer at 2 GiB; ingest batches stay a quarter of that.
 _MAX_BATCH_BYTES = 512 << 20
-
-
-@contextmanager
-def _scoped_conf(spark: SparkSession, key: str, value: str):
-    """Set a runtime conf for the block, then leave it exactly as found.
-
-    The restore is UNCONDITIONAL: a key that was not session-set is
-    unset() again (falling back to its SQLConf default), never re-set to
-    that default.  Leaking an override into the session is the
-    order-dependent-grading failure class (r6 q292)."""
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, value)
-    try:
-        yield
-    finally:
-        if old is not None:
-            spark.conf.set(key, old)
-        else:
-            spark.conf.unset(key)
 
 
 def _ingest_batch_rows(spark: SparkSession, pdf: pd.DataFrame) -> int:

@@ -1017,7 +1017,7 @@ def q38_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     media = attach_fake_media(d)
-    feats = extract_features(media, fake=True)
+    feats = extract_features(media)
     return feats.select(
         "doc_id",
         "n_bytes",
@@ -6344,7 +6344,7 @@ def q207_streaming_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from apache_arrow_spark.functions.similarity import (
-        cosine,
+        cosine_topk,
         hyperplanes,
         lsh_probes,
         streaming_lsh_index_upsert,
@@ -6368,15 +6368,7 @@ def q207_streaming_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         for x in e.filter(F.col("vec_id") == 0).first()["embedding"]
     ]
     probes = lsh_probes(qv, hyperplanes(64, 10), n_probe_bits=2)
-    qarr = F.array(*[F.lit(x) for x in qv])
-    cand = index.filter(F.col("__bucket").isin(list(probes)))
-    return (
-        cand.select(
-            "vec_id", F.round(cosine(F.col("embedding"), qarr), 6).alias("sim")
-        )
-        .orderBy(F.col("sim").desc(), F.col("vec_id"))
-        .limit(20)
-    )
+    return cosine_topk(index.filter(F.col("__bucket").isin(*probes)), qv, k=20)
 
 
 # --------------------------------------------------------------------------
@@ -6933,8 +6925,8 @@ def q215_kmeans_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproducible across engines because double summation is
     order-dependent; quantize-first makes every assignment and every
     centroid update exact integer arithmetic, so the oracle replays the
-    full training trajectory bit-for-bit (assignment = per-vector top-1
-    window over broadcast centroids; update = posexplode cells ->
+    full training trajectory bit-for-bit (assignment = per-vector argmin
+    aggregate over broadcast centroids; update = posexplode cells ->
     combinable sums -> k x dim driver rows).  The readout is the final
     clustering's size and exact integer inertia per cluster — the
     trained coarse quantizer a production IVF index would partition by."""
@@ -14053,16 +14045,14 @@ def q288_quality_budget_cutoff(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_chars",
         (-F.col("n_chars")).alias("neg_chars"),
     )
-    total = t.agg(F.sum("toks").alias("total"))
     r = global_running_sum(t, ["neg_chars", "doc_id"], "toks", out_col="cum")
-    kept = r.crossJoin(F.broadcast(total)).filter(
-        F.col("cum") <= F.expr("total div 2")
-    )
-    return kept.agg(
+    total = r._aas_sum_total  # summed from the scan's range totals: no second pass
+    budget = F.lit(None if total is None else total // 2).cast("bigint")
+    return r.filter(F.col("cum") <= budget).agg(
         F.count(F.lit(1)).alias("n_kept"),
         F.sum("toks").alias("tokens_kept"),
         F.min("n_chars").alias("cutoff_n_chars"),
-        F.max(F.expr("total div 2")).alias("budget"),
+        F.max(budget).alias("budget"),
     )
 
 

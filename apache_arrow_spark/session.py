@@ -80,6 +80,25 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
+@contextmanager
+def _scoped_conf(spark: SparkSession, key: str, value: str):
+    """Set a runtime conf for the block, then leave it exactly as found.
+
+    The restore is UNCONDITIONAL: a key that was not session-set is
+    unset() again (falling back to its SQLConf default), never re-set to
+    that default.  An override leaked into the session makes later
+    queries depend on call order (the q292 failure)."""
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if old is not None:
+            spark.conf.set(key, old)
+        else:
+            spark.conf.unset(key)
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Make ``apache_arrow_spark`` importable on executor Python workers.
 

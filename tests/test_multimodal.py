@@ -34,7 +34,7 @@ def test_decode_stub_gated():
 
 
 def test_extract_features_batchwise(spark, media):
-    out = extract_features(media, fake=True)
+    out = extract_features(media)
     rows = out.collect()
     assert len(rows) == 50
     for r in rows[:5]:
@@ -100,7 +100,7 @@ def test_decode_image_real_path():
 
 
 def test_extract_features_real(spark):
-    """extract_features(fake=False) over real BMP/PPM payloads."""
+    """extract_features over real BMP/PPM payloads."""
     from apache_arrow_spark.functions.multimodal import (
         attach_real_media,
         extract_features,
@@ -108,7 +108,7 @@ def test_extract_features_real(spark):
 
     df = spark.range(6).select(F.col("id").alias("doc_id"), F.lit("x").alias("text"))
     media = attach_real_media(df)
-    out = extract_features(media, fake=False).collect()
+    out = extract_features(media).collect()
     assert len(out) == 6
     for r in out:
         assert len(r["features"]) == 16

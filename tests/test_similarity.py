@@ -373,3 +373,85 @@ def test_recall_table_dedups_duplicate_approx_pairs(spark):
     assert rows[1]["n_exact"] == 2 and rows[1]["n_hits"] == 1
     assert rows[2]["n_exact"] == 1 and rows[2]["n_hits"] == 0
     assert rows[1]["recall_micro"] == 500000
+
+
+@pytest.mark.parametrize("n_probe_bits", [0, 1, 2])
+def test_knn_join_lsh_candidates_are_the_lsh_probes_ball(spark, n_probe_bits):
+    """With k above the corpus size every candidate survives the rank, so
+    knn_join_lsh's pairs must be exactly the corpus rows whose bucket is in
+    lsh_probes' Hamming ball (<= n_probe_bits) around the query's bucket."""
+    from apache_arrow_spark.functions.similarity import knn_join_lsh, lsh_probes
+
+    n, dim, planes = 300, 16, 6
+    v = np.random.default_rng(5).normal(size=(n, dim)).astype(np.float32)
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in v[i]]) for i in range(n)],
+        "vec_id bigint, embedding array<float>",
+    )
+    hp = hyperplanes(dim, planes)
+    bucket = {
+        r["vec_id"]: r["b"]
+        for r in df.select("vec_id", lsh_bucket(F.col("embedding"), hp).alias("b")).collect()
+    }
+    want = set()
+    for q in range(10):
+        probes = lsh_probes([float(x) for x in v[q]], hp, n_probe_bits)
+        want |= {(q, i) for i in range(n) if i != q and bucket[i] in probes}
+    out = knn_join_lsh(
+        df.filter("vec_id < 10"), df, k=n, planes=planes, n_probe_bits=n_probe_bits
+    )
+    assert {(r["q_id"], r["n_id"]) for r in out.collect()} == want
+
+
+@pytest.mark.parametrize(
+    "entry",
+    ["knn_join_exact", "knn_join_lsh", "knn_join_ivf", "ann_recall_eval", "ivf_recall_eval"],
+)
+def test_knn_entry_points_on_empty_corpus_return_no_rows(spark, edf, vecs, entry):
+    from apache_arrow_spark.functions import similarity
+
+    args = [edf.filter("vec_id < 5"), edf.limit(0)]
+    if "ivf" in entry:
+        args.append([[float(x) for x in vecs[i]] for i in (3, 50)])
+    assert getattr(similarity, entry)(*args).count() == 0
+
+
+def test_lsh_index_unpinnable_plan_degrades_with_one_warning(
+    spark, edf, vecs, monkeypatch, caplog
+):
+    """A frame whose physical plan cannot be pinned (no ``_jdf``, as on
+    Spark Connect) still answers like ann_topk_lsh, leaves the conf as it
+    found it, and says so with exactly one WARN."""
+    import logging
+    import uuid
+
+    from apache_arrow_spark import log as log_mod
+    from apache_arrow_spark.functions import similarity
+
+    class NoJdf:
+        def __init__(self, df):
+            self._df = df
+
+        def __getattr__(self, name):
+            if name == "_jdf":
+                raise AttributeError(name)
+            return getattr(self._df, name)
+
+    topk = similarity.cosine_topk
+    monkeypatch.setattr(similarity, "cosine_topk", lambda *a, **kw: NoJdf(topk(*a, **kw)))
+    monkeypatch.setattr(log_mod, "_warned", set())
+    key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+    before = spark.conf.get(key, None)
+    name = f"lsh_idx_{uuid.uuid4().hex[:6]}"
+    q = [float(x) for x in vecs[0]]
+    try:
+        similarity.materialize_lsh_index(edf, name, planes=8, n_buckets=16)
+        with caplog.at_level(logging.WARNING, logger="apache_arrow_spark"):
+            probe = similarity.ann_topk_lsh_indexed(spark, name, q, k=5, planes=8, n_probe_bits=2)
+        assert spark.conf.get(key, None) == before
+        ref = ann_topk_lsh(edf, q, k=5, planes=8, n_probe_bits=2)
+        assert [r["vec_id"] for r in probe.collect()] == [r["vec_id"] for r in ref.collect()]
+        warns = [r for r in caplog.records if r.name == "apache_arrow_spark"]
+        assert len(warns) == 1 and warns[0].levelno == logging.WARNING
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
